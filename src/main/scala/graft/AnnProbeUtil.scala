@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The shared recall-protocol kernel of the three ANN exhibits
-  * (AnnFrontier, AnnServeSweep, AnnDriftProbe): ONE definition of the
+/** The recall-protocol kernel of the ANN exhibits (AnnServeSweep; the
+  * r15/r16 frontier and drift exhibits in BASELINE.md used the same
+  * one): ONE definition of the
   * exact-L2 baseline (self-excluded, (d2, cand_id) tie-break), the
   * recall@k denominator rule (the exact baseline's OWN row count —
   * ADVICE r13), the seed-7 clustered fixture, and the timing helper.

@@ -66,9 +66,10 @@ object AnnServeSweep {
     * data — serving cannot return neighbors the graph never linked),
     * so the gap between beam=16 and that ceiling prices the walk,
     * and the gap between the ceiling and 1.0 prices the build —
-    * the observation AnnBuildKnobProbe turned into the r16 geometry
-    * upgrade (this sweep keeps the r15 geometry for row-to-row
-    * comparability with the recorded tables). */
+    * the observation the build-knob frontier (BASELINE.md round 16)
+    * turned into the r16 geometry upgrade (this sweep keeps the r15
+    * geometry for row-to-row comparability with the recorded
+    * tables). */
   private def qualitySweep(spark: SparkSession, name: String,
       vecs0: DataFrame, repeats: Int): Seq[String] = {
     val vecs = vecs0.select(col("id"), col("v"))

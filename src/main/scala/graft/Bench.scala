@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line per run, consumed by the driver as
   * BENCH_r{N}.json.
   *
@@ -161,7 +159,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cores()
     val repeats = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt)
     // numeric registry order (see scaladoc): "q116_quality_gate" -> 116
@@ -192,22 +190,7 @@ object Bench {
     }
     require(prefixes.distinct.size == queries.size,
       s"duplicate bench key prefixes: ${prefixes.diff(prefixes.distinct).distinct.mkString(",")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill scratch on the fastest writable tier (see the
-      // Scratch placement scaladoc — measured 31× file-create gap on
-      // this host; parameterised via SPARK_GRAFT_SCRATCH_DIR)
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      // serialized sort writer for every exchange (the 100 TB writer;
-      // see SparkTuning — bypass's per-reduce file concat mmap-thrashed
-      // 32-core runs)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        SparkTuning.bypassMergeThreshold)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench", cpus)
     def load1: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
@@ -490,8 +473,8 @@ object Bench {
       val detail = (results.map { r =>
         "\"" + r.name + "\":{\"median\":" + f"${r.median}%.3f" +
           ",\"min\":" + f"${r.min}%.3f" + "," + teleJson(r).drop(1)
-        // cpus is quoted: SPARK_GRAFT_CPUS="*" is a legitimate setting
-        // (local[*]) that would otherwise emit unparseable JSON
+        // cpus is the resolved core count (SPARK_GRAFT_CPUS="*" reads
+        // as the host's processors); quoted, as in earlier captures
       } :+ s""""__env":{$env,"cpus":"$cpus"}""").mkString("{", ",", "}")
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_detail.json"),

@@ -897,25 +897,7 @@ object Main {
     case Nil       => GraftConfig()
   }
 
-  def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      // serialized sort writer for every exchange (the 100 TB writer;
-      // see SparkTuning — bypass's per-reduce file concat mmap-thrashed
-      // 32-core runs)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        SparkTuning.bypassMergeThreshold)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  def session(): SparkSession = GraftSession("graft")
 
   private def run(gc: GraftConfig, interval: String, input: String,
       outDir: String, searchK: Boolean): Unit = {

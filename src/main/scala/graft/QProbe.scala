@@ -1,52 +1,40 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev-only single-query probe — the measure-first tool for the batch
-  * registry (the [[StreamProbe]] twin for non-streaming rows): runs the
-  * named queries under the BENCH-IDENTICAL session (master
-  * local[$SPARK_GRAFT_CPUS], shuffle partitions = cpus, AQE on) for
-  * `SPARK_GRAFT_PROBE_REPEATS` repeats each, and splits every repeat
-  * into the pieces the bench's single wall number hides:
+/** Dev-only single-query probe, the measure-first tool for the
+  * registry: runs the named queries under the bench's session
+  * ([[GraftSession]]) for `SPARK_GRAFT_PROBE_REPEATS` repeats each,
+  * and splits every repeat into the pieces the bench's single wall
+  * number hides:
   *
   *   - `build`  — driver time constructing the DataFrame (a query
-  *     function that walks/collects eagerly — ML fits, serve walks —
-  *     spends its life here);
+  *     function that walks/collects eagerly — ML fits, serve walks,
+  *     streaming replays — spends its life here);
   *   - `plan`   — analysis + optimization + physical planning of the
   *     returned frame (executedPlan force);
   *   - `exec`   — the count() the bench times;
   *   - `gcMs`   — summed task JVM GC over the repeat (bench telemetry);
   *   - `jobs`/`stages` — scheduler traffic per repeat (the per-round
   *     machinery cost of iterative operators is job count, invisible
-  *     in bytes).
+  *     in bytes);
+  *   - one `stream` line per micro-batch trigger when the query runs a
+  *     streaming replay: the trigger's `durationMs` breakdown
+  *     (addBatch / queryPlanning / walCommit / commitOffsets / ...)
+  *     and its state operators' commit times.
   *
   * `SPARK_GRAFT_PROBE_CONF="k=v;k=v"` applies session conf overrides
   * before the repeats (the A/B knob — e.g. AQE off), printed back so a
   * probe log is self-describing. Not part of the driver contract.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
-  *   sbt "runMain graft.QProbe q120_pagerank q172_personalized_pagerank"
+  *   sbt "runMain graft.QProbe q120_pagerank q233_stream_join_late_oracled"
   */
 object QProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: QProbe <queryName>...")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPEATS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      // serialized sort writer for every exchange (the 100 TB writer;
-      // see SparkTuning — bypass's per-reduce file concat mmap-thrashed
-      // 32-core runs)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        SparkTuning.bypassMergeThreshold)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-qprobe")
     sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach { spec =>
       spec.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)
@@ -67,11 +55,23 @@ object QProbe {
           jobs.incrementAndGet(); stages.addAndGet(js.stageInfos.size)
         }
       })
+    // streaming replays stop their query before returning, so progress
+    // is captured globally and printed after the repeat
+    val progresses = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.streaming.StreamingQueryProgress]()
+    spark.streams.addListener(
+      new org.apache.spark.sql.streaming.StreamingQueryListener {
+        import org.apache.spark.sql.streaming.StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit =
+          progresses.add(e.progress)
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      })
     // Optional 25 ms all-thread stack sampler (SPARK_GRAFT_PROBE_SAMPLE=1):
-    // unlike StreamProbe's executor-only sampler this also catches
-    // DRIVER-side cost (planning, broadcast builds, collects) — prints
-    // the top busy frames per query so "where did the wall go" is
-    // answered from the probe log, not guessed.
+    // executor task threads AND driver-side cost (planning, broadcast
+    // builds, collects) — prints the top busy frames per query so
+    // "where did the wall go" is answered from the probe log, not
+    // guessed.
     val sampleOn = new java.util.concurrent.atomic.AtomicBoolean(false)
     val frameCounts = new java.util.concurrent.ConcurrentHashMap[String,
       java.util.concurrent.atomic.AtomicLong]()
@@ -146,6 +146,7 @@ object QProbe {
     args.foreach { name =>
       val q = Registry.byName(name)
       settle()
+      progresses.clear()
       frameCounts.clear()
       (1 to repeats).foreach { r =>
         sampleOn.set(true)
@@ -162,6 +163,7 @@ object QProbe {
           f"build=${(t1 - t0) / 1e9}%.3f plan=${(t2 - t1) / 1e9}%.3f " +
           f"exec=${(t3 - t2) / 1e9}%.3f gcMs=${gcMs.get} " +
           f"jobs=${jobs.get} stages=${stages.get}")
+        printProgress(progresses)
         settle()
       }
       if (!frameCounts.isEmpty) {
@@ -177,5 +179,22 @@ object QProbe {
       }
     }
     spark.stop()
+  }
+
+  /** One `stream` line per trigger the repeat ran, in trigger order
+    * (durations largest first), then drains the queue. */
+  private def printProgress(ps: java.util.Queue[
+      org.apache.spark.sql.streaming.StreamingQueryProgress]): Unit = {
+    import scala.jdk.CollectionConverters._
+    ps.asScala.toSeq.sortBy(_.timestamp).foreach { p =>
+      val d = p.durationMs.asScala.toSeq.map { case (k, v) =>
+        k -> v.longValue }.sortBy(-_._2)
+      val state = p.stateOperators.map(o =>
+        s" ${o.operatorName}:commitMs=${o.commitTimeMs}").mkString
+      println(s"[qprobe]   stream batch=${p.batchId} " +
+        s"rows=${p.numInputRows} " +
+        d.map { case (k, v) => s"$k=$v" }.mkString(",") + state)
+    }
+    ps.clear()
   }
 }

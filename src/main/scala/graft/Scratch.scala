@@ -83,25 +83,15 @@ object Scratch {
     r
   }
 
-  /** Per-JVM `spark.local.dir` under the self-cleaning root — session
-    * builders pass this so shuffle/spill scratch rides the same fast
-    * tier (see the placement note above). Resolved lazily at first
-    * session build; stable for the JVM's lifetime. */
+  /** Per-JVM `spark.local.dir` under the self-cleaning root —
+    * [[GraftSession]] applies it so shuffle/spill scratch rides the
+    * same fast tier (see the placement note above). Resolved lazily at
+    * first session build; stable for the JVM's lifetime. */
   lazy val sparkLocalDir: String = dir("spark_local_")
 
   /** A fresh directory under the self-cleaning root. */
   def dir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(root, prefix).toString
-
-  /** Release one scratch directory NOW (probes that loop over
-    * per-stage scratch artifacts — e.g. the drift probe's per-batch
-    * rebuild indexes — release each as soon as it is read, instead
-    * of accumulating until the exit sweep). Best-effort, and only
-    * paths under the self-cleaning root are touched. */
-  def drop(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (p.normalize.startsWith(root.normalize)) delete(p)
-  }
 
   private def delete(p: java.nio.file.Path): Unit =
     try {

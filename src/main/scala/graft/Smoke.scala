@@ -1,26 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Minimal end-to-end smoke: runs the flagship `SparkEntry.entry` the way
   * the driver does and prints the row count (expects > 0).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      // serialized sort writer for every exchange (the 100 TB writer;
-      // see SparkTuning — bypass's per-reduce file concat mmap-thrashed
-      // 32-core runs)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        SparkTuning.bypassMergeThreshold)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-smoke")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -1,7 +1,8 @@
 package graft
 
-/** Session-level shuffle tuning shared by every graft entrypoint
-  * (Bench, Verify, Main/CLI, probes, the test suite).
+/** Session-level shuffle tuning. [[GraftSession]] applies it, so every
+  * graft entrypoint (Bench, Verify, Main/CLI, QProbe, the test suite)
+  * gets the same writer threshold.
   *
   * bypassMergeThreshold (r17 optimization round, guide §1/§2.2): the
   * r16 driver capture collapsed 2.5-5× on the heavy iterative rows at
@@ -34,8 +35,9 @@ package graft
   * e.g. `200` restores Spark's default).
   *
   * The default is 4, not 0: the stateful streaming replays run their
-  * micro-batch shuffles at 2 partitions (the EventStream runner
-  * contract), and a same-window A/B on the stream-join family read
+  * micro-batch shuffles at 2 partitions
+  * (`EventStream.ReplayPartitions`, which a spec keeps ≤ this
+  * threshold), and a same-window A/B on the stream-join family read
   * threshold 0 ≈ +0.6 s/query vs 4 ≈ Spark's default — the serialized
   * writer's fixed per-task setup (page allocation + in-memory sort)
   * outweighs a 2-file concat, whose mmap churn is negligible at that

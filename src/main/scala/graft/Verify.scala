@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,20 +11,7 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, q) => (s, o, Some(q.split(',').toSeq))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      // serialized sort writer for every exchange (the 100 TB writer;
-      // see SparkTuning — bypass's per-reduce file concat mmap-thrashed
-      // 32-core runs)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        SparkTuning.bypassMergeThreshold)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     val selected = only match {
       case Some(prefixes) => SparkEntry.queries.filter { case (n, _) =>

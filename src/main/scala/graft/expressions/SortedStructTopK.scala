@@ -19,35 +19,39 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   * sort_array's interpreted struct ordering, array_distinct's O(n²)
   * equivalence scan, and slice's per-element BOXED copy of struct
   * elements). This kernel unpacks the (d2, id) pairs into primitive
-  * arrays once, sorts them with the SAME total order Spark's
+  * arrays once, sorts them with the SAME order Spark's
   * PhysicalDataType gives struct<double, long> — lexicographic
-  * (java.lang.Double.compare, Long.compare); Double.compare is
-  * exactly Catalyst's double ordering (NaN greatest, −0.0 < 0.0) —
-  * dedups adjacent compare-equal pairs in the same pass
-  * (array_distinct's equivalence on a struct IS ordering
-  * equivalence: Spark's ArrayDistinct falls back to `ordering.equiv`
-  * for non-atomic elements, and compare == 0 on (double, long) means
-  * bit-identical fields), and emits at most `k` rows. Identical
-  * output, one pass, zero boxing until the ≤ k result rows.
+  * (Catalyst's `compareDoubles`, Long.compare), where
+  * `compareDoubles` puts NaN greatest and treats −0.0 and 0.0 as
+  * EQUAL — and breaks remaining ties by input position, which is
+  * sort_array's stable sort. It dedups adjacent compare-equal pairs
+  * in the same pass, keeping the first (array_distinct's
+  * equivalence on a struct IS ordering equivalence: Spark's
+  * ArrayDistinct falls back to `ordering.equiv` for non-atomic
+  * elements and keeps the first occurrence, so of (−0.0, y) and
+  * (0.0, y) the one earlier in the input survives), and emits at
+  * most `k` rows. Identical output, one pass, zero boxing until the
+  * ≤ k result rows.
   *
-  * Contract (the SortedLongIntersect pattern): elements and both
-  * struct fields are non-null — the only callers build the array
-  * with `collect_list(struct(d2, id))` over join outputs whose
-  * fields are never null. `k` must be a positive literal. Output
-  * type = input type, so the downstream `explode` + field reads are
-  * untouched.
+  * Contract (the SortedLongIntersect pattern): elements are
+  * non-null — `checkInputDataTypes` accepts only `containsNull =
+  * false` arrays, which the only callers build with
+  * `collect_list(struct(d2, id))` over join outputs whose fields are
+  * never null. `k` must be a positive literal. Output type = input
+  * type, so the downstream `explode` + field reads are untouched.
   */
 case class SortedStructTopK(child: Expression, k: Int)
     extends UnaryExpression with Serializable {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(s: StructType, _)
+    case ArrayType(s: StructType, false)
         if s.length == 2 && s(0).dataType == DoubleType &&
           s(1).dataType == LongType && k >= 1 =>
       TypeCheckResult.TypeCheckSuccess
     case _ => TypeCheckResult.TypeCheckFailure(
-      "sorted_struct_topk expects array<struct<double, long>> and a " +
-        s"positive k, got ${child.dataType.simpleString} / k=$k")
+      "sorted_struct_topk expects array<struct<double, long>> with " +
+        "non-null elements and a positive k, got " +
+        s"${child.dataType.catalogString} / k=$k")
   }
 
   override def dataType: DataType = child.dataType
@@ -77,25 +81,27 @@ object SortedStructTopK {
     GraftExprBridge.column(
       SortedStructTopK(GraftExprBridge.expression(arr), k))
 
-  /** The fused kernel: sort by (Double.compare, Long.compare), drop
-    * adjacent equal pairs, keep the first `k`. */
+  /** The fused kernel: stable sort by (compareDoubles, Long.compare),
+    * drop adjacent equal pairs, keep the first `k`. */
   def run(arr: ArrayData, k: Int): ArrayData = {
     val n = arr.numElements()
     val d = new Array[Double](n)
     val y = new Array[Long](n)
+    val pos = new Array[Int](n)
     var i = 0
     while (i < n) {
       val row = arr.getStruct(i, 2)
       d(i) = row.getDouble(0)
       y(i) = row.getLong(1)
+      pos(i) = i
       i += 1
     }
-    if (n > 1) sort(d, y, 0, n - 1)
-    // dedup adjacent (compare-equal ⇒ bit-identical fields) + cap
+    if (n > 1) sort(d, y, pos, 0, n - 1)
+    // dedup adjacent compare-equal pairs, first kept + cap
     val outRows = new java.util.ArrayList[InternalRow](math.min(n, k))
     i = 0
     while (i < n && outRows.size < k) {
-      if (i == 0 || java.lang.Double.compare(d(i), d(i - 1)) != 0 ||
+      if (i == 0 || compareDoubles(d(i), d(i - 1)) != 0 ||
           y(i) != y(i - 1)) {
         outRows.add(new org.apache.spark.sql.catalyst.expressions
           .GenericInternalRow(Array[Any](d(i), y(i))))
@@ -105,15 +111,22 @@ object SortedStructTopK {
     new GenericArrayData(outRows.toArray)
   }
 
-  private def less(d1: Double, y1: Long, d2: Double, y2: Long): Boolean = {
-    val c = java.lang.Double.compare(d1, d2)
-    c < 0 || (c == 0 && y1 < y2)
+  /** Catalyst's double order (`SQLOrderingUtil.compareDoubles`):
+    * NaN greatest, −0.0 == 0.0. */
+  private def compareDoubles(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  private def less(d1: Double, y1: Long, p1: Int,
+      d2: Double, y2: Long, p2: Int): Boolean = {
+    val c = compareDoubles(d1, d2)
+    c < 0 || (c == 0 && (y1 < y2 || (y1 == y2 && p1 < p2)))
   }
 
-  /** In-place quicksort over the parallel (d, y) arrays by the
-    * lexicographic (Double.compare, Long.compare) order — insertion
-    * sort below 16 elements, median-of-three pivot. */
-  private def sort(d: Array[Double], y: Array[Long],
+  /** In-place quicksort over the parallel (d, y, pos) arrays by the
+    * lexicographic (compareDoubles, Long.compare, input position)
+    * order — a total order, so the result equals a stable sort —
+    * insertion sort below 16 elements, median-of-three pivot. */
+  private def sort(d: Array[Double], y: Array[Long], p: Array[Int],
       lo0: Int, hi0: Int): Unit = {
     var lo = lo0
     var hi = hi0
@@ -121,43 +134,47 @@ object SortedStructTopK {
       if (hi - lo < 16) {
         var i = lo + 1
         while (i <= hi) {
-          val dv = d(i); val yv = y(i)
+          val dv = d(i); val yv = y(i); val pv = p(i)
           var j = i - 1
-          while (j >= lo && less(dv, yv, d(j), y(j))) {
-            d(j + 1) = d(j); y(j + 1) = y(j); j -= 1
+          while (j >= lo && less(dv, yv, pv, d(j), y(j), p(j))) {
+            d(j + 1) = d(j); y(j + 1) = y(j); p(j + 1) = p(j); j -= 1
           }
-          d(j + 1) = dv; y(j + 1) = yv
+          d(j + 1) = dv; y(j + 1) = yv; p(j + 1) = pv
           i += 1
         }
         return
       }
       // median-of-three pivot to the middle
       val mid = lo + (hi - lo) / 2
-      if (less(d(mid), y(mid), d(lo), y(lo))) swap(d, y, lo, mid)
-      if (less(d(hi), y(hi), d(lo), y(lo))) swap(d, y, lo, hi)
-      if (less(d(hi), y(hi), d(mid), y(mid))) swap(d, y, mid, hi)
-      val pd = d(mid); val py = y(mid)
+      if (less(d(mid), y(mid), p(mid), d(lo), y(lo), p(lo)))
+        swap(d, y, p, lo, mid)
+      if (less(d(hi), y(hi), p(hi), d(lo), y(lo), p(lo)))
+        swap(d, y, p, lo, hi)
+      if (less(d(hi), y(hi), p(hi), d(mid), y(mid), p(mid)))
+        swap(d, y, p, mid, hi)
+      val pd = d(mid); val py = y(mid); val pp = p(mid)
       var i = lo
       var j = hi
       while (i <= j) {
-        while (less(d(i), y(i), pd, py)) i += 1
-        while (less(pd, py, d(j), y(j))) j -= 1
-        if (i <= j) { swap(d, y, i, j); i += 1; j -= 1 }
+        while (less(d(i), y(i), p(i), pd, py, pp)) i += 1
+        while (less(pd, py, pp, d(j), y(j), p(j))) j -= 1
+        if (i <= j) { swap(d, y, p, i, j); i += 1; j -= 1 }
       }
       // recurse into the smaller half, loop on the larger (bounded depth)
       if (j - lo < hi - i) {
-        if (lo < j) sort(d, y, lo, j)
+        if (lo < j) sort(d, y, p, lo, j)
         lo = i
       } else {
-        if (i < hi) sort(d, y, i, hi)
+        if (i < hi) sort(d, y, p, i, hi)
         hi = j
       }
     }
   }
 
-  private def swap(d: Array[Double], y: Array[Long],
+  private def swap(d: Array[Double], y: Array[Long], p: Array[Int],
       i: Int, j: Int): Unit = {
     val td = d(i); d(i) = d(j); d(j) = td
     val ty = y(i); y(i) = y(j); y(j) = ty
+    val tp = p(i); p(i) = p(j); p(j) = tp
   }
 }

@@ -178,13 +178,14 @@ object IvfIndex extends Serializable {
     * the index is never re-read. The centroids drift from the true
     * k-means of the grown corpus over time — the standard IVF trade;
     * retrain (writeIndex) when recall floors degrade. MEASURED drift
-    * (AnnDriftProbe, BASELINE.md r15): through 5 append batches of
-    * 5% each (33% growth over the base), served recall@8 holds
-    * WITHIN NOISE of a full retrain at the same geometry (clustered
+    * (append-path drift, BASELINE.md round 15): through 5 append
+    * batches of 5% each (33% growth over the base), served recall@8
+    * holds WITHIN NOISE of a full retrain at the same geometry (clustered
     * 1.000 at every stage vs retrain's 0.97–1.00; near-uniform
     * corpus 0.35–0.37 both) — stale centroids cost nothing at this
     * growth scale; schedule retrains past ~30% growth or on a
-    * distribution shift, verified with the probe. Idempotent: ids
+    * distribution shift, verified against an exact baseline.
+    * Idempotent: ids
     * already present in the index are skipped (one anti-join against
     * the pruned cand_id column), so a redelivered/retried batch —
     * e.g. a crash between this append and a streaming checkpoint

@@ -52,6 +52,16 @@ object NnDescent {
   private def d2(a: Column, b: Column): Column =
     graft.expressions.ArrayL2Sq(a, b)
 
+  /** The driver walks' per-hop dedup of scored (query_id, cand, d2)
+    * rows: one row per (query_id, cand), first kept. d2 recomputes are
+    * bit-stable, so keying on the ids collapses exactly what the
+    * relational DISTINCT does — including NaN d2 rows, which a
+    * whole-tuple `Seq.distinct` keeps apart (NaN != NaN) so that each
+    * copy spends a beam slot. */
+  private def distinctCand(
+      rows: Seq[(Long, Long, Double)]): Seq[(Long, Long, Double)] =
+    rows.distinctBy(t => (t._1, t._2))
+
   /** Global rank 0..n-1 of every vector by (Σᵢ v[i], id) —
     * bit-identical to `row_number().over(Window.orderBy(proj, id))`
     * but DISTRIBUTED (VERDICT r12 #2): the unpartitioned window this
@@ -106,19 +116,20 @@ object NnDescent {
     * re-derives the rank-spaced entry frame from the GROWN corpus
     * under the build's own rule ([[entryCandidates]]: entryCand rows
     * at projection ranks ⌊q·n/entryCand⌋). [[appendToGraph]] refreshes
-    * ADJACENCY but never the entry frame, and the measured replication
-    * sweep (DedupScaleProbe --annserve, BASELINE.md r15) showed what
+    * ADJACENCY but never the entry frame, and the measured graph-ANN
+    * serve replication sweep (BASELINE.md round 15) showed what
     * that costs: a fixed 32-entry frame's serve recall decays
     * 0.540 → 0.175 as disjoint regions grow the corpus 10×, because
     * entry COVERAGE thins — the graph and the walk are fine. This is
     * the operator the "schedule refreshes by entry-frame staleness"
     * guidance schedules: one O(N log N) rank pass over the grown
     * corpus (no edge work at all), vs the O(N·cap²·rounds) rebuild.
-    * AnnDriftProbe's append+refresh column measures the effect per
-    * append stage next to the append-with-stale-entries and
-    * full-rebuild lines. Pass the grown corpus (base ∪ every appended
-    * batch); size `entryCand` with the corpus' region/cluster count
-    * (the sweep's 32·m rule held recall exactly flat). */
+    * The append+refresh column of BASELINE.md round 16's drift
+    * table measures the effect per append stage next to the
+    * append-with-stale-entries and full-rebuild lines. Pass the grown
+    * corpus (base ∪ every appended batch); size `entryCand` with the
+    * corpus' region/cluster count (the sweep's 32·m rule held recall
+    * exactly flat). */
   def refreshEntries(vecs: DataFrame, entryCand: Int = 32): DataFrame =
     entryCandidates(vecs, entryCand)
 
@@ -155,14 +166,14 @@ object NnDescent {
     // rounds) AND lineage-truncated — round r's plan references round
     // r-1's tree TWICE (undirect + keep-k union), so an untruncated
     // chain grows ~2^rounds and OOMs in plan stringification from
-    // rounds ≥ 5 (hit by AnnBuildKnobProbe's geometry sweep, r16;
-    // persist alone cannot fix it — the q240/AnnDriftProbe lesson).
+    // rounds ≥ 5 (hit by the build-knob geometry sweep, BASELINE.md
+    // round 16; persist alone cannot fix it — the q240 lesson).
     // DEAD round states (N·k rows each) are released explicitly as
     // soon as the next round materializes — checkpoint blocks are the
     // data's ONLY copy (not LRU-evictable like a persist), so leaving
     // rounds+1 of them per build to the periodic context-cleaner
     // sweep would accumulate storage across multi-build runs (the
-    // knob probe runs 12 builds per dataset). Only the FINAL round's
+    // round-16 knob sweep ran 12 builds per dataset). Only the FINAL round's
     // blocks stay: they back the returned output's recompute path.
     var edges = ranked
       .select(col("id").as("u"), col("v").as("uv"), col("rn"),
@@ -277,8 +288,8 @@ object NnDescent {
     * keyed merge into the affected old lists — independent of corpus
     * size.
     *
-    * MEASURED drift (AnnDriftProbe, BASELINE.md r15): through 5
-    * append batches of 5% each (25% total growth), base-probe
+    * MEASURED drift (append-path drift, BASELINE.md round 15):
+    * through 5 append batches of 5% each (25% total growth), base-probe
     * recall@8 against the GROWN corpus never drops below the
     * same-geometry full rebuild — search-insert places each new node
     * near-exactly over the already-converged graph, while a fresh
@@ -288,8 +299,8 @@ object NnDescent {
     * schedule [[refreshEntries]] over the grown corpus by ENTRY-FRAME
     * staleness (appends refresh adjacency, never the entry frame,
     * and stale entries are the measured decay axis — one rank pass
-    * fixes it without touching an edge), and re-measure with the
-    * probe when the data distribution shifts.
+    * fixes it without touching an edge), and re-measure recall
+    * against an exact baseline when the data distribution shifts.
     *
     * `graph`: the persisted (u, nb, d2) edge list; `vecs`: (id, v);
     * `newVecs`: (nid, qv) with ids disjoint from `vecs`;
@@ -386,8 +397,8 @@ object NnDescent {
     visited ++= s0
     def topB(rows: Seq[(Long, Long, Double)],
         n: Int): Seq[(Long, Long, Double)] =
-      rows.groupBy(_._1).values.flatMap(
-        _.distinct.sortBy(t => (t._3, t._2)).take(n)).toSeq
+      distinctCand(rows).groupBy(_._1).values.flatMap(
+        _.sortBy(t => (t._3, t._2)).take(n)).toSeq
         .sortBy(t => (t._1, t._3, t._2))
     var frontier = topB(s0, beam)
     val qvOf = nvLocal.toMap
@@ -403,7 +414,7 @@ object NnDescent {
           d2(col("qv"), col("nv2")).as("d2"))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val hopSet = (stepped ++ frontier).distinct
+      val hopSet = distinctCand(stepped ++ frontier)
       visited ++= hopSet
       frontier = topB(hopSet, beam)
     }
@@ -540,11 +551,11 @@ object NnDescent {
       // pattern beamTopK already uses): the frame is bounded at
       // probes·beam·k rows by the walk contract, so an in-plan
       // DISTINCT + row_number window spent two keyed shuffles per hop
-      // on data that fits in one task. d2 recomputes are bit-stable,
-      // so Seq.distinct collapses exactly what DISTINCT did (a
-      // candidate reached from two beam nodes, or already in the
-      // beam, spends one slot), and sortBy (d2, cand) is the same
-      // total order the window ranked by — the kept set is identical.
+      // on data that fits in one task. distinctCand collapses exactly
+      // what DISTINCT did (a candidate reached from two beam nodes, or
+      // already in the beam, spends one slot), and sortBy (d2, cand)
+      // is the same total order the window ranked by — the kept set
+      // is identical.
       val expanded = cur.join(graph.select(col("u").as("node_id"),
           col("nb")), "node_id")
         .join(vecs.select(col("id").as("nb"), col("v").as("nv")), "nb")
@@ -552,7 +563,7 @@ object NnDescent {
           d2(col("qv"), col("nv")).as("d2"))
         .collect().map(r => (r.getLong(0), r.getLong(1),
           r.getDouble(2))).toSeq
-      pos = (expanded ++ pos).distinct
+      pos = distinctCand(expanded ++ pos)
         .groupBy(_._1).values
         .flatMap(_.sortBy(t => (t._3, t._2)).take(beam))
         .toSeq.sortBy(p => (p._1, p._3, p._2))
@@ -638,10 +649,9 @@ object NnDescent {
         .select(col("query_id"), col("nb").as("cand"),
           d2(col("qv"), col("nv")).as("d2"))
         .collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getDouble(2))).toSeq.distinct
+          r.getDouble(2))).toSeq
       note(stepped)
-      val next = (pos.map(p => (p._1, p._2, p._3)) ++ stepped)
-        .distinct.groupBy(_._1).values
+      val next = distinctCand(pos ++ stepped).groupBy(_._1).values
         .flatMap(_.sortBy(p => (p._3, p._2)).take(beam)).toSeq
       fixed = next.sortBy(p => (p._1, p._3, p._2)) ==
         pos.sortBy(p => (p._1, p._3, p._2))
@@ -935,9 +945,10 @@ object NnDescent {
               g.adj.getOrElse(u, Array.empty[Long]).map { nb =>
                 (nb, l2sq(qv, g.vec(nb)))
               }
-            }.distinct
+            }
             stepped.foreach { case (c, d) => note(c, d) }
-            val next = (pos ++ stepped).distinct
+            // keyed on the node id, as distinctCand is
+            val next = (pos ++ stepped).distinctBy(_._1)
               .sortBy(p => (p._2, p._1)).take(beam)
             fixed = next == pos
             pos = next

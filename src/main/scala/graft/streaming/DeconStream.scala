@@ -30,7 +30,8 @@ object DeconStream {
       indexDir: String, outDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       oneFilePerBatch: Boolean = true,
-      shufflePartitions: Option[Int] = Some(2)): Unit = {
+      shufflePartitions: Option[Int] =
+        Some(EventStream.ReplayPartitions)): Unit = {
     // read the index ONCE (w + the gram set), not per micro-batch;
     // overlapCore broadcasts the gram set itself when a batch runs
     val w = spark.read.parquet(s"$indexDir/meta").head().getInt(0)

@@ -22,7 +22,8 @@ import graft.operators.Dedup
   *
   * At 100 TB: each micro-batch costs O(batch) signatures + one bucket
   * join against the index — the same scaling the batch ingest loop
-  * proves (DedupIngestSpec / DedupScaleProbe); the stream adds only
+  * proves (DedupIngestSpec; the dedup scale exhibit, BASELINE.md
+  * round 3); the stream adds only
   * file-arrival orchestration. */
 object DocIngest {
 

@@ -18,6 +18,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStream {
 
+  /** The shuffle width every streaming replay runner (these and the
+    * foreachBatch family on [[FileIngest.withPartitions]]) defaults
+    * to: sized to the replay corpus, not the session default. It must
+    * stay ≤ [[graft.SparkTuning.bypassMergeThreshold]], so these
+    * stateful shuffles keep Spark's bypass writer, which measured
+    * faster for them than the serialized sort writer (see the
+    * SparkTuning scaladoc); GraftSessionSpec ties the two. */
+  val ReplayPartitions: Int = 2
+
   final case class Event(event_id: Long, ts: java.sql.Timestamp,
       user_id: Long, event_type: String, value: Double)
 
@@ -133,8 +142,8 @@ object EventStream {
   def runAppend(spark: SparkSession, dir: String,
       transform: DataFrame => DataFrame,
       queryName: String,
-      shufflePartitions: Option[Int] = Some(2)): DataFrame =
-    withPartitions(spark, shufflePartitions) {
+      shufflePartitions: Option[Int] = Some(ReplayPartitions)): DataFrame =
+    FileIngest.withPartitions(spark, shufflePartitions) {
       val q = transform(source(spark, dir)).writeStream
         .outputMode(OutputMode.Append)
         .format("memory").queryName(queryName)
@@ -187,10 +196,10 @@ object EventStream {
 
   def runLateAppend(spark: SparkSession, srcDir: String, delay: String,
       queryName: String = "graft_late",
-      shufflePartitions: Option[Int] = Some(2),
+      shufflePartitions: Option[Int] = Some(ReplayPartitions),
       windowDur: String = "1 hour",
       slide: Option[String] = None): DataFrame =
-    withPartitions(spark, shufflePartitions) {
+    FileIngest.withPartitions(spark, shufflePartitions) {
       val schema = spark.read.parquet(srcDir).schema
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -223,8 +232,8 @@ object EventStream {
   def runLateCellDensity(spark: SparkSession, srcDir: String,
       delay: String, eps: Double,
       queryName: String = "graft_cell_density",
-      shufflePartitions: Option[Int] = Some(2)): DataFrame =
-    withPartitions(spark, shufflePartitions) {
+      shufflePartitions: Option[Int] = Some(ReplayPartitions)): DataFrame =
+    FileIngest.withPartitions(spark, shufflePartitions) {
       val schema = spark.read.parquet(srcDir).schema
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -259,8 +268,8 @@ object EventStream {
   def runLateCellDensity2d(spark: SparkSession, srcDir: String,
       delay: String, epsV: Double, epsU: Double,
       queryName: String = "graft_cell_density_2d",
-      shufflePartitions: Option[Int] = Some(2)): DataFrame =
-    withPartitions(spark, shufflePartitions) {
+      shufflePartitions: Option[Int] = Some(ReplayPartitions)): DataFrame =
+    FileIngest.withPartitions(spark, shufflePartitions) {
       val schema = spark.read.parquet(srcDir).schema
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -294,8 +303,8 @@ object EventStream {
     * the (window, shard) survivor matrix. */
   def runUpdateCounts(spark: SparkSession, srcDir: String,
       delay: String, queryName: String = "graft_update_late",
-      shufflePartitions: Option[Int] = Some(2)): DataFrame =
-    withPartitions(spark, shufflePartitions) {
+      shufflePartitions: Option[Int] = Some(ReplayPartitions)): DataFrame =
+    FileIngest.withPartitions(spark, shufflePartitions) {
       val schema = spark.read.parquet(srcDir).schema
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -326,8 +335,8 @@ object EventStream {
   def runSessionAppend(spark: SparkSession, srcDir: String,
       delay: String, gap: String, keyCol: String = "k",
       queryName: String = "graft_session_late",
-      shufflePartitions: Option[Int] = Some(2)): DataFrame =
-    withPartitions(spark, shufflePartitions) {
+      shufflePartitions: Option[Int] = Some(ReplayPartitions)): DataFrame =
+    FileIngest.withPartitions(spark, shufflePartitions) {
       val schema = spark.read.parquet(srcDir).schema
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -364,9 +373,9 @@ object EventStream {
     * Returns (p_event_id, c_event_id, p_ms, c_ms). */
   def runLateJoin(spark: SparkSession, srcDir: String, delay: String,
       queryName: String = "graft_late_join",
-      shufflePartitions: Option[Int] = Some(2),
+      shufflePartitions: Option[Int] = Some(ReplayPartitions),
       joinType: String = "inner"): DataFrame =
-    withPartitions(spark, shufflePartitions) {
+    FileIngest.withPartitions(spark, shufflePartitions) {
       val schema = spark.read.parquet(srcDir).schema
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -393,23 +402,13 @@ object EventStream {
       spark.table(queryName)
     }
 
-  private def withPartitions[A](spark: SparkSession,
-      n: Option[Int])(body: => A): A = n match {
-    case None => body
-    case Some(parts) =>
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, parts.toString)
-      try body finally spark.conf.set(key, prev)
-  }
-
   /** Runs a streaming aggregation to completion against the file source
     * and returns the final result table (memory sink, complete mode). */
   def runToCompletion(spark: SparkSession, dir: String,
       transform: DataFrame => DataFrame,
       queryName: String = "graft_stream",
-      shufflePartitions: Option[Int] = Some(2)): DataFrame =
-    withPartitions(spark, shufflePartitions) {
+      shufflePartitions: Option[Int] = Some(ReplayPartitions)): DataFrame =
+    FileIngest.withPartitions(spark, shufflePartitions) {
       val q = transform(source(spark, dir)).writeStream
         .outputMode(OutputMode.Complete)
         .format("memory").queryName(queryName)
@@ -427,8 +426,8 @@ object EventStream {
     * which is what q95's DuckDB oracle checks. */
   def runSessionize(spark: SparkSession, dir: String, gapMinutes: Int = 30,
       queryName: String = "graft_sessions",
-      shufflePartitions: Option[Int] = Some(2)): DataFrame =
-    withPartitions(spark, shufflePartitions) {
+      shufflePartitions: Option[Int] = Some(ReplayPartitions)): DataFrame =
+    FileIngest.withPartitions(spark, shufflePartitions) {
       import spark.implicits._
       implicit val sp: SparkSession = spark
       val events = source(spark, dir)
@@ -526,8 +525,8 @@ object EventStream {
     * is filtered from the output. */
   def runSessionizeFlush(spark: SparkSession, dir: String,
       gapMinutes: Int = 30, queryName: String = "graft_sessions_flush",
-      shufflePartitions: Option[Int] = Some(2)): DataFrame =
-    withPartitions(spark, shufflePartitions) {
+      shufflePartitions: Option[Int] = Some(ReplayPartitions)): DataFrame =
+    FileIngest.withPartitions(spark, shufflePartitions) {
       import spark.implicits._
       implicit val sp: SparkSession = spark
       val sentinelUser = -1L
@@ -577,8 +576,8 @@ object EventStream {
     * watermark evicts ids older than that bound, keeping state finite. */
   def runExactlyOnce(spark: SparkSession, dir: String,
       queryName: String = "graft_exactly_once",
-      shufflePartitions: Option[Int] = Some(2)): DataFrame =
-    withPartitions(spark, shufflePartitions) {
+      shufflePartitions: Option[Int] = Some(ReplayPartitions)): DataFrame =
+    FileIngest.withPartitions(spark, shufflePartitions) {
       val delivered = source(spark, dir).unionByName(source(spark, dir))
       val q = delivered.dropDuplicates("event_id").writeStream
         .outputMode(OutputMode.Append)

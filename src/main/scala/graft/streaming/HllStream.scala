@@ -19,7 +19,8 @@ object HllStream {
   def runToCompletion(spark: SparkSession, srcDir: String,
       hllDir: String, checkpointDir: String, keyCol: String,
       p: Int = 8, oneFilePerBatch: Boolean = true,
-      shufflePartitions: Option[Int] = Some(2)): Unit =
+      shufflePartitions: Option[Int] =
+        Some(EventStream.ReplayPartitions)): Unit =
     FileIngest.withPartitions(spark, shufflePartitions) {
       FileIngest.drain(
         FileIngest.stream(spark, srcDir, checkpointDir, oneFilePerBatch) {

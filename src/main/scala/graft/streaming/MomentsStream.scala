@@ -23,7 +23,8 @@ object MomentsStream {
       momentsDir: String, checkpointDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64, oneFilePerBatch: Boolean = true,
-      shufflePartitions: Option[Int] = Some(2)): Unit =
+      shufflePartitions: Option[Int] =
+        Some(EventStream.ReplayPartitions)): Unit =
     FileIngest.withPartitions(spark, shufflePartitions) {
       FileIngest.drain(
         FileIngest.stream(spark, srcDir, checkpointDir, oneFilePerBatch) {

@@ -30,7 +30,8 @@ object NearDupStream {
       indexDir: String, outDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.5, oneFilePerBatch: Boolean = true,
-      shufflePartitions: Option[Int] = Some(2)): Unit = {
+      shufflePartitions: Option[Int] =
+        Some(EventStream.ReplayPartitions)): Unit = {
     // read the index ONCE (geometry + bands + shingle sets), not per
     // micro-batch
     val meta = spark.read.parquet(s"$indexDir/meta").head()

@@ -43,7 +43,8 @@ object QualityMonitor {
       reportDir: String, checkpointDir: String,
       rules: Seq[Profiler.Rule],
       oneFilePerBatch: Boolean = true,
-      shufflePartitions: Option[Int] = Some(2)): Unit =
+      shufflePartitions: Option[Int] =
+        Some(EventStream.ReplayPartitions)): Unit =
     FileIngest.withPartitions(spark, shufflePartitions) {
       FileIngest.drain(start(spark, srcDir, reportDir, checkpointDir,
         rules, oneFilePerBatch))

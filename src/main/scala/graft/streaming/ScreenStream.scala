@@ -25,7 +25,8 @@ object ScreenStream {
       outDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       oneFilePerBatch: Boolean = true,
-      shufflePartitions: Option[Int] = Some(2)): Unit =
+      shufflePartitions: Option[Int] =
+        Some(EventStream.ReplayPartitions)): Unit =
     FileIngest.withPartitions(spark, shufflePartitions) {
       FileIngest.drain(
         FileIngest.stream(spark, srcDir, checkpointDir, oneFilePerBatch) {

@@ -30,7 +30,8 @@ object SketchStreams {
       bloomDir: String, checkpointDir: String, keyCol: String,
       mBits: Int = 4096, k: Int = 3,
       oneFilePerBatch: Boolean = true,
-      shufflePartitions: Option[Int] = Some(2)): Unit =
+      shufflePartitions: Option[Int] =
+        Some(EventStream.ReplayPartitions)): Unit =
     FileIngest.withPartitions(spark, shufflePartitions) {
       FileIngest.drain(
         FileIngest.stream(spark, srcDir, checkpointDir, oneFilePerBatch) {
@@ -45,7 +46,8 @@ object SketchStreams {
   def runCmsToCompletion(spark: SparkSession, srcDir: String,
       cmsDir: String, checkpointDir: String, keyCol: String,
       d: Int = 4, w: Int = 512, oneFilePerBatch: Boolean = true,
-      shufflePartitions: Option[Int] = Some(2)): Unit =
+      shufflePartitions: Option[Int] =
+        Some(EventStream.ReplayPartitions)): Unit =
     FileIngest.withPartitions(spark, shufflePartitions) {
       FileIngest.drain(
         FileIngest.stream(spark, srcDir, checkpointDir, oneFilePerBatch) {
@@ -61,7 +63,8 @@ object SketchStreams {
   def runHistToCompletion(spark: SparkSession, srcDir: String,
       histDir: String, checkpointDir: String, valueCol: String,
       width: Long, nbins: Int, oneFilePerBatch: Boolean = true,
-      shufflePartitions: Option[Int] = Some(2)): Unit =
+      shufflePartitions: Option[Int] =
+        Some(EventStream.ReplayPartitions)): Unit =
     FileIngest.withPartitions(spark, shufflePartitions) {
       FileIngest.drain(
         FileIngest.stream(spark, srcDir, checkpointDir, oneFilePerBatch) {

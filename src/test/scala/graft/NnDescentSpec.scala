@@ -393,4 +393,26 @@ class NnDescentSpec extends GraftSuite {
       s"corpus recall $r left the recorded band [0.08, 0.9) — " +
         "re-measure and update BASELINE.md")
   }
+
+  test("per-hop dedup keys on (query_id, cand): a NaN-scored candidate " +
+      "reached twice spends one beam slot") {
+    // entries 1 and 2 both link to NaN-vector node 3; 1 also links to
+    // NaN-vector node 4, the only way to the exact match 5. With
+    // beam 4, hop 1 holds {1, 2, 3, 4} once 3's two copies collapse;
+    // a whole-tuple distinct keeps both (NaN != NaN), fills the beam
+    // with {1, 2, 3, 3} and never reaches 5.
+    val nan = Double.NaN
+    val vecs = Seq((1L, Seq(10.0)), (2L, Seq(11.0)), (3L, Seq(nan)),
+      (4L, Seq(nan)), (5L, Seq(0.0))).toDF("id", "v")
+    val graph = Seq((1L, 3L), (2L, 3L), (1L, 4L), (4L, 5L))
+      .toDF("u", "nb")
+    val probes = Seq((100L, Seq(0.0))).toDF("query_id", "qv")
+    val entries = vecs.filter($"id" <= 2L)
+      .select($"id".as("node_id"), $"v")
+    val tr = NnDescent.greedyTrace(graph, vecs, probes, hops = 2,
+        beam = 4, entries = entries)
+      .collect().map(r => (r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .sortBy(_._1).toSeq
+    assert(tr === Seq((0, 1L, 100.0), (1, 1L, 100.0), (2, 5L, 0.0)))
+  }
 }

@@ -1506,7 +1506,7 @@ class BucketCapSpec extends GraftSuite {
   }
 }
 
-/** Linear-growth gate for the MinHash stack ([[graft.DedupScaleProbe]]):
+/** Linear-growth gate for the MinHash stack ([[DedupScaleCounts]]):
   * at fixed dup rate, candidate pairs and found dup pairs must grow
   * ~linearly with corpus size — the 100 TB survival property (the
   * all-pairs baseline grows quadratically). */
@@ -1514,8 +1514,8 @@ class DedupScaleSpec extends GraftSuite {
 
   test("candidates and dup pairs grow linearly in corpus replication") {
     val docs = Tables.documents(spark, sf)
-    val (c1, d1) = graft.DedupScaleProbe.counts(docs, 1)
-    val (c4, d4) = graft.DedupScaleProbe.counts(docs, 4)
+    val (c1, d1) = DedupScaleCounts.counts(docs, 1)
+    val (c4, d4) = DedupScaleCounts.counts(docs, 4)
     assert(d1 > 0, "no planted dups found at base size")
     // dup structure replicates exactly: disjoint shingle spaces mean no
     // cross-replica pairs, so dups scale by exactly m
@@ -1528,8 +1528,8 @@ class DedupScaleSpec extends GraftSuite {
 
   test("block-dup instances replicate EXACTLY m× — no cross-corpus term") {
     val docs = Tables.documents(spark, sf)
-    val (b1, d1) = graft.DedupScaleProbe.blockCounts(docs, 1)
-    val (b3, d3) = graft.DedupScaleProbe.blockCounts(docs, 3)
+    val (b1, d1) = DedupScaleCounts.blockCounts(docs, 1)
+    val (b3, d3) = DedupScaleCounts.blockCounts(docs, 3)
     assert(d1 > 0, "no duplicated blocks planted at base size")
     assert(b3 === 3 * b1)
     assert(d3 === 3 * d1)
@@ -1537,8 +1537,8 @@ class DedupScaleSpec extends GraftSuite {
 
   test("duplicated spans replicate EXACTLY m× — no cross-corpus term") {
     val docs = Tables.documents(spark, sf)
-    val s1 = graft.DedupScaleProbe.spanCounts(docs, 1)
-    val s3 = graft.DedupScaleProbe.spanCounts(docs, 3)
+    val s1 = DedupScaleCounts.spanCounts(docs, 1)
+    val s3 = DedupScaleCounts.spanCounts(docs, 3)
     assert(s1 > 0, "no duplicated spans found at base size")
     assert(s3 === 3 * s1)
   }
@@ -1547,7 +1547,7 @@ class DedupScaleSpec extends GraftSuite {
       "leaks nothing across replicas at x2") {
     val docs = Tables.documents(spark, sf)
     val (streamed, direct, cross) =
-      graft.DedupScaleProbe.streamScreenCounts(spark, docs, 2)
+      DedupScaleCounts.streamScreenCounts(spark, docs, 2)
     assert(streamed > 0, "no matches found at x2 — fixture broken")
     assert(streamed === direct,
       s"stream != batch through the checkpoint: $streamed vs $direct")
@@ -1561,7 +1561,7 @@ class DedupScaleSpec extends GraftSuite {
     // is additivity: the union's pairs are exactly the sum of each
     // replica's own — the banded join adds no cross-corpus pair
     val docs = Tables.documents(spark, sf)
-    val (total, per) = graft.DedupScaleProbe.simhashCounts(docs, 3)
+    val (total, per) = DedupScaleCounts.simhashCounts(docs, 3)
     assert(per.forall(_ > 0), s"a replica found no pairs: $per")
     assert(total === per.sum,
       s"cross-replica pairs leaked: $total != sum of $per")
@@ -1570,8 +1570,8 @@ class DedupScaleSpec extends GraftSuite {
   test("phrase-screen hits are EXACTLY additive and content-pure " +
       "across clones") {
     val docs = Tables.documents(spark, sf)
-    val (h1, m1) = graft.DedupScaleProbe.screenCounts(docs, 1)
-    val (h3, m3) = graft.DedupScaleProbe.screenCounts(docs, 3)
+    val (h1, m1) = DedupScaleCounts.screenCounts(docs, 1)
+    val (h3, m3) = DedupScaleCounts.screenCounts(docs, 3)
     assert(h1 > 0, "no screening hits at base size")
     assert(h3 === 3 * h1, s"hits not additive: x1=$h1 x3=$h3")
     // one distinct hit string across all clones of every base doc —
@@ -1582,8 +1582,8 @@ class DedupScaleSpec extends GraftSuite {
   test("DSIR weights are content-pure: every clone bit-equal to its " +
       "base doc, at 1× and 3× replication") {
     val docs = Tables.documents(spark, sf)
-    val (r1, m1) = graft.DedupScaleProbe.dsirCounts(docs, 1)
-    val (r3, m3) = graft.DedupScaleProbe.dsirCounts(docs, 3)
+    val (r1, m1) = DedupScaleCounts.dsirCounts(docs, 1)
+    val (r3, m3) = DedupScaleCounts.dsirCounts(docs, 3)
     assert(r1 > 0 && r3 === 3 * r1)
     // the model shifts with the corpus, but a doc's weight under a
     // given model may depend on its TEXT only — one distinct weight
@@ -1595,8 +1595,8 @@ class DedupScaleSpec extends GraftSuite {
   test("quality-classifier scores are content-pure across clones; " +
       "training stays bounded") {
     val docs = Tables.documents(spark, sf)
-    val (r1, m1) = graft.DedupScaleProbe.qcCounts(docs, 1)
-    val (r3, m3) = graft.DedupScaleProbe.qcCounts(docs, 3)
+    val (r1, m1) = DedupScaleCounts.qcCounts(docs, 1)
+    val (r3, m3) = DedupScaleCounts.qcCounts(docs, 3)
     assert(r1 > 0 && r3 === 3 * r1)
     assert(m1 === 1L, s"base corpus: $m1 distinct scores for one doc")
     assert(m3 === 1L, s"3x corpus: $m3 distinct scores for one doc")
@@ -1609,7 +1609,7 @@ class DedupScaleSpec extends GraftSuite {
     // decorrelated fmix64 signatures mean the banded Hamming join must
     // add no cross-replica pair
     val docs = Tables.documents(spark, sf)
-    val (iT, iP, aT, aP) = graft.DedupScaleProbe.mmCounts(docs, 2)
+    val (iT, iP, aT, aP) = DedupScaleCounts.mmCounts(docs, 2)
     assert(iP.forall(_ > 0), s"a replica planted no image pairs: $iP")
     assert(aP.forall(_ > 0), s"a replica planted no audio pairs: $aP")
     assert(iT === iP.sum, s"image cross-replica leak: $iT != sum $iP")
@@ -1623,8 +1623,8 @@ class DedupScaleSpec extends GraftSuite {
     // must stay ~linear (the Σ|cluster|² claim, measured rather than
     // asserted from the plan shape)
     val emb = Tables.embeddings(spark, sf)
-    val (p1, t1, n1) = graft.DedupScaleProbe.semCounts(emb, 1)
-    val (p4, t4, n4) = graft.DedupScaleProbe.semCounts(emb, 4)
+    val (p1, t1, n1) = DedupScaleCounts.semCounts(emb, 1)
+    val (p4, t4, n4) = DedupScaleCounts.semCounts(emb, 4)
     assert(n1 > 0, "no clones planted at base size")
     assert(p1 === n1, s"base recall: found $p1 of $n1 planted pairs")
     assert(n4 === 4 * n1)
@@ -3025,7 +3025,7 @@ class DeconScaleSpec extends GraftSuite {
   test("contaminated docs are EXACTLY additive across disjoint-gram " +
       "replicas — the eval broadcast join has no cross-corpus term") {
     val docs = Tables.documents(spark, sf)
-    val (total, per) = graft.DedupScaleProbe.deconCounts(docs, 3)
+    val (total, per) = DedupScaleCounts.deconCounts(docs, 3)
     assert(total > 0, "no contamination found at base size")
     assert(total === per.sum,
       s"cross-replica gram leak: $total != sum of $per")

@@ -82,10 +82,58 @@ class SortedStructTopKSpec extends GraftSuite {
       .first()
     assert(r.getSeq[Long](0) === Seq(7L, 2L, 9L)) // sorted, deduped
     assert(r.getSeq[Long](1) === Seq(7L, 2L))
+    // an empty array with non-null elements (filter keeps the input's
+    // containsNull = false; a CAST to array<struct<..>> would not)
     val empty = spark.range(1).select(size(SortedStructTopK(
-      expr("CAST(array() AS array<struct<d2: double, y: bigint>>)"),
+      expr("filter(array(named_struct('d2', 1.0D, 'y', 1L)), x -> false)"),
       3))).first().getInt(0)
     assert(empty === 0)
+  }
+
+  test("-0.0 and 0.0 order and dedup as Catalyst's compareDoubles " +
+      "does: equal, first in input order kept") {
+    // non-literal arrays (built from id), so the kernel runs in the
+    // executed plan rather than being constant-folded; row 0 puts
+    // +0.0 first, row 1 puts -0.0 first. The sign comes from a
+    // negation, not from a -0.0 literal: Catalyst's Literal equality
+    // says 0.0 == -0.0, so `x * 0.0` and `x * -0.0` would be merged
+    // as one expression (and the two arrays with them).
+    val pz = col("id").cast("double") * lit(0.0)
+    val nz = -pz
+    def e(d: org.apache.spark.sql.Column, y: Long) =
+      struct(d.as("d2"), lit(y).as("y"))
+    val a = array(e(pz, 1L), e(nz, 1L), e(nz, 0L), e(lit(0.5), 3L),
+      e(pz, 2L), e(nz, 2L))
+    val b = array(e(nz, 1L), e(pz, 1L), e(pz, 0L), e(lit(0.5), 3L),
+      e(nz, 2L), e(pz, 2L))
+    val df = spark.range(2)
+      .select(col("id"), when(col("id") === 0L, a).otherwise(b).as("e"))
+    def bits(r: org.apache.spark.sql.Row, i: Int): Seq[(Long, Long)] =
+      r.getSeq[org.apache.spark.sql.Row](i).map(p =>
+        (java.lang.Double.doubleToRawLongBits(p.getDouble(0)), p.getLong(1)))
+    Seq(2, 3, 10).foreach { k =>
+      val rows = df.select(SortedStructTopK(col("e"), k).as("m"),
+          generic(col("e"), k).as("g"))
+        .collect()
+      rows.foreach(r => assert(bits(r, 0) === bits(r, 1), s"k=$k"))
+    }
+    val kept = df.select(col("id"), SortedStructTopK(col("e"), 10))
+      .collect().map(r => r.getLong(0) -> bits(r, 1)).toMap
+    val (p0, n0) = (java.lang.Double.doubleToRawLongBits(0.0),
+      java.lang.Double.doubleToRawLongBits(-0.0))
+    // zeros tie, so y orders them; each y keeps its first zero
+    assert(kept(0).map(_._2) === Seq(0L, 1L, 2L, 3L))
+    assert(kept(0).take(3) === Seq((n0, 0L), (p0, 1L), (p0, 2L)))
+    assert(kept(1).take(3) === Seq((p0, 0L), (n0, 1L), (n0, 2L)))
+  }
+
+  test("an array with nullable elements is rejected at analysis") {
+    val nullable = expr("array(named_struct('d2', 1.0D, 'y', 1L), " +
+      "CAST(NULL AS struct<d2: double, y: bigint>))")
+    val err = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.range(1).select(SortedStructTopK(nullable, 2))
+    }
+    assert(err.getMessage.contains("non-null elements"), err.getMessage)
   }
 
   test("expression participates in whole-stage codegen (no fallback)") {

@@ -4,30 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (lazy, never stopped — the
-  * test JVM is forked per sbt run). */
+  * test JVM is forked per sbt run). 8 cores whatever the host, plus a
+  * temp warehouse dir. */
 object SparkSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      // same fast-scratch tier as every production session builder
-      // (r16 optimization round — see the Scratch placement scaladoc)
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      // serialized sort writer for every exchange (the 100 TB writer;
-      // see SparkTuning — bypass's per-reduce file concat mmap-thrashed
-      // 32-core runs)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        SparkTuning.bypassMergeThreshold)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession("graft-test", cores = 8,
+    extra = Seq("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
   val sfSmoke = "/root/testdata/sf0.001"
 }
 
