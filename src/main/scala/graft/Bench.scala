@@ -138,6 +138,13 @@ object Bench {
   /** This JVM's cumulative cpu time in ns (−1 when the platform bean
     * doesn't expose it). /proc/stat ticks are USER_HZ = 100/s on
     * every Linux this runs on; the caller converts. */
+  /** (classes compiled, compile ns) by Spark's codegen so far. */
+  private def codegenNow(): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      .getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      .compileTime)
+
   private def procCpuNs(): Long =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case b: com.sun.management.OperatingSystemMXBean =>
@@ -145,10 +152,16 @@ object Bench {
       case _ => -1L
     }
 
-  /** One timed repeat with its host/JVM context (capture order). */
+  /** One timed repeat with its host/JVM context (capture order).
+    * `codegen` is (classes compiled, compile ms) from Spark's
+    * `CodegenMetrics` and `CodeGenerator.compileTime`: this JVM's
+    * compiles, so in local mode the executors' too. A repeat that
+    * compiles again after the first has fallen off Spark's 100-entry
+    * codegen cache. */
   private final case class Sample(sec: Double, load: Double,
       freeMb: Long, tele: (Long, Long, Long, Long, Long),
-      steal: Double, other: Double, settled: Boolean)
+      steal: Double, other: Double, settled: Boolean,
+      codegen: (Long, Long))
 
   /** One query's capture: kept samples (exactly `repeats`), any
     * retry-discarded samples, and whether a flagged sample survived
@@ -255,12 +268,14 @@ object Bench {
       def runOnce(): Sample = {
         val ticks0 = cpuTicks()
         val proc0 = procCpuNs()
+        val cg0 = codegenNow()
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
         val sec = (System.nanoTime() - t0) / 1e9
+        val cg1 = codegenNow()
         val ticks1 = cpuTicks()
         val proc1 = procCpuNs()
         val dTot = ticks1._1 - ticks0._1
@@ -277,7 +292,8 @@ object Bench {
               (ticks1._3 - ticks0._3) - procTicks) / dTot
           }
         val (tele, settled) = telemetry.settleRead()
-        Sample(sec, load1, freeHeapMb, tele, steal, other, settled)
+        Sample(sec, load1, freeHeapMb, tele, steal, other, settled,
+          (cg1._1 - cg0._1, (cg1._2 - cg0._2) / 1000000L))
       }
       // the 1.0 s floor keeps tail rows out of the retry budget: the
       // first r15 full capture (cid 1786898073) spent flags on a
@@ -414,6 +430,8 @@ object Bench {
         ",\"rload\":[" + all.map(s => f"${s.load}%.1f").mkString(",") + "]" +
         ",\"rfree\":[" + all.map(_.freeMb).mkString(",") + "]" +
         ",\"rgcMs\":[" + all.map(_.tele._1).mkString(",") + "]" +
+        ",\"rcgN\":[" + all.map(_.codegen._1).mkString(",") + "]" +
+        ",\"rcgMs\":[" + all.map(_.codegen._2).mkString(",") + "]" +
         ",\"rsrMb\":[" + all.map(s => mb(s.tele._2)).mkString(",") + "]" +
         ",\"rswMb\":[" + all.map(s => mb(s.tele._3)).mkString(",") + "]" +
         ",\"rspillMb\":[" + all.map(s => mb(s.tele._4)).mkString(",") + "]" +
@@ -466,7 +484,8 @@ object Bench {
       // "all"/"rload"/"rfree" are in CAPTURE ORDER (see the sampling
       // comment above), not sorted
       // per-repeat JVM/stage telemetry (capture order, like "all"):
-      // GC ms, shuffle read/write MB, spill MB, peak execution-memory
+      // GC ms, codegen classes compiled and compile ms, shuffle
+      // read/write MB, spill MB, peak execution-memory
       // MB — the q166-class driver-row adjudication data (r12) —
       // plus rsettled (0 = the telemetry bus was still draining at
       // the 1 s cap, counters may bleed into the next repeat)

@@ -20,18 +20,21 @@ import graft.operators.Dedup
   * tracks file progress, so a restart resumes ingesting exactly where
   * it stopped, against the index the previous run left behind.
   *
-  * At 100 TB: each micro-batch costs O(batch) signatures + one bucket
-  * join against the index — the same scaling the batch ingest loop
-  * proves (DedupIngestSpec; the dedup scale exhibit, BASELINE.md
-  * round 3); the stream adds only
-  * file-arrival orchestration. */
+  * Cost per micro-batch: one signature pass over the batch, plus a
+  * re-banding and re-sizing of the WHOLE index for the bucket join, so
+  * a batch costs O(batch + index), not O(batch) — the same loop as the
+  * batch ingest ([[Dedup.ingest]], DedupIngestSpec); the stream adds
+  * only file-arrival orchestration. */
 object DocIngest {
 
   /** Start the ingest stream over `srcDir` (parquet document files with
     * at least (idCol, textCol) columns; ids must be globally unique
     * across batches — the usual monotonic-id ingest contract). Each
-    * batch writes `outDir/batch_<id>/{batch_pairs,cross_pairs,kept}`
-    * and appends survivors' signatures to `indexDir`.
+    * batch writes `outDir/batch_<id>/` with `batch_index` (the batch's
+    * (id, signature, hs) rows), `batch_pairs`, `cross_pairs`, `kept`
+    * and, once an index exists, `kept_new` (the survivors not yet in
+    * the index), then appends those survivors' signatures to
+    * `indexDir`.
     *
     * `oneFilePerBatch` forces file-granularity micro-batches — the
     * deterministic replay used by the spec; leave false in production

@@ -9,7 +9,9 @@ import graft.operators.Dedup
 /** The production ingest loop: each batch dedups against the GROWING
   * persisted index — batch 2 must catch its clones of batch-1 documents
   * from the index alone (batch-1 text is never re-read), survivors
-  * append, and the geometry guard rejects a mismatched banding. */
+  * append, and the geometry guard rejects a mismatched banding. Each
+  * step's outputs equal the public operators they stand for, and a
+  * steady step compiles no generated class. */
 class DedupIngestSpec extends GraftSuite {
   import spark.implicits._
 
@@ -72,5 +74,89 @@ class DedupIngestSpec extends GraftSuite {
       Dedup.ingest(spark, fresh, indexDir, out3, numHashes = 16)
     }
     assert(e.getMessage.contains("geometry"))
+  }
+
+  /** Batch `k`: 12 fresh docs, 2 in-batch clones of them and 2 clones of
+    * batch k-1's fresh docs (cross dups from the second batch on), all
+    * with ids unique to the batch. */
+  private def shapedBatch(k: Int): org.apache.spark.sql.DataFrame = {
+    val base = docs.filter($"doc_id" >= 12 * k && $"doc_id" < 12 * k + 12)
+    val prev = docs.filter($"doc_id" >= 12 * (k - 1) &&
+      $"doc_id" < 12 * (k - 1) + 2)
+    base.select(($"doc_id" + 1000L * k).as("doc_id"), $"text")
+      .unionAll(base.filter($"doc_id" < 12 * k + 2)
+        .select(($"doc_id" + 1000L * k + 500L).as("doc_id"), $"text"))
+      .unionAll(prev.select(($"doc_id" + 1000L * k + 700L).as("doc_id"),
+        $"text"))
+  }
+
+  test("a steady ingest step compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = Files.createTempDirectory("graft_ing_cg").toString
+    // batches are parquet files, as a stream's file source would read
+    (0 until 4).foreach(k =>
+      shapedBatch(k).write.parquet(s"$root/in/b$k"))
+    val compiles = (0 until 4).map { k =>
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (cross, within, kept) = Dedup.ingest(spark,
+        spark.read.parquet(s"$root/in/b$k"), s"$root/idx", s"$root/o$k")
+      assert(within > 0L && kept > 0L && (k == 0 || cross > 0L))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    // the first two steps warm the cache (bootstrap, then the first
+    // against-index step); every later step reuses every class
+    assert(compiles.drop(2) === Seq(0L, 0L), s"compiles per step: $compiles")
+  }
+
+  test("ingest outputs equal the public operators, bit for bit") {
+    val root = Files.createTempDirectory("graft_ing_par").toString
+    val idxDir = s"$root/idx"
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    // bootstrap, a normal step, and the normal step's batch retried
+    Seq(0, 1, 1).zipWithIndex.foreach { case (k, step) =>
+      val batch = shapedBatch(k)
+      val out = s"$root/o$step"
+      val hasIndex = step > 0
+      val idxBefore = if (hasIndex)
+        Dedup.readIndex(spark, idxDir).select($"id").as[Long].collect().toSet
+      else Set.empty[Long]
+      val wantCross = if (hasIndex)
+        rows(Dedup.minhashNearDupsAgainstIndex(
+          Dedup.readIndex(spark, idxDir), batch, "doc_id", "text"),
+          "new_id", "corpus_id", "jaccard")
+      else Set.empty[Seq[Any]]
+      val (nCross, nWithin, nKept) = Dedup.ingest(spark, batch, idxDir, out)
+
+      val pairs = rows(spark.read.parquet(s"$out/batch_pairs"),
+        "id_a", "id_b", "jaccard")
+      assert(pairs === rows(Dedup.minhashNearDups(batch, "doc_id", "text"),
+        "id_a", "id_b", "jaccard"))
+      assert(pairs.nonEmpty && nWithin === pairs.size.toLong)
+      val cross = rows(spark.read.parquet(s"$out/cross_pairs"),
+        "new_id", "corpus_id", "jaccard")
+      assert(cross === wantCross && nCross === cross.size.toLong)
+      if (hasIndex) assert(cross.nonEmpty)
+
+      val victims = cross.map(_.head) ++ Dedup.connectedComponents(
+          spark.read.parquet(s"$out/batch_pairs"))
+        .filter($"id" =!= $"component").select($"id").as[Long]
+        .collect().toSet
+      val kept = rows(spark.read.parquet(s"$out/kept"), "doc_id", "text")
+      assert(kept === rows(batch, "doc_id", "text")
+        .filterNot(r => victims.contains(r.head)))
+      assert(nKept === kept.size.toLong)
+
+      // the appended index rows are minhashIndex(kept_new), array order
+      // included (Seq equality is ordered)
+      val keptNew = spark.read.parquet(
+        if (hasIndex) s"$out/kept_new" else s"$out/kept")
+      val appended = Dedup.readIndex(spark, idxDir)
+        .filter(!$"id".isin(idxBefore.toSeq.map(Long.box): _*))
+      assert(rows(appended, "id", "signature", "hs") ===
+        rows(Dedup.minhashIndex(keptNew, "doc_id", "text"),
+          "id", "signature", "hs"))
+      if (step == 2) assert(appended.isEmpty)
+    }
   }
 }
