@@ -155,7 +155,7 @@ object Main {
            |       graft.Main ann-query-ivfpq <indexDir> <queriesParquet> <outDir> [conf.json]
            |       graft.Main graph-ann-build <embeddingsParquet> <indexDir> [--k n] [--cap n] [--rounds n] [--entries n]
            |       graft.Main graph-ann-ingest <batchParquet> <indexDir> [--refresh-entries] [--beam n] [--hops n]
-           |       graft.Main graph-ann-serve <indexDir> <queriesParquet> <outDir> [--engine auto|driver|bulk|hot] [--beam n] [--hops n] [--topk n]
+           |       graft.Main graph-ann-serve <indexDir> <queriesParquet> <outDir> [--beam n] [--hops n] [--topk n]
            |       graft.Main graph-ann-stream <srcDir> <indexDir> <chkDir> [--refresh-entries]
            |       graft.Main sketch-ingest <batchParquet> <sketchDir> [batchId]
            |       graft.Main sketch-report <sketchDir> <outDir>
@@ -307,7 +307,8 @@ object Main {
     * build persists graph/vectors/entries/adj/meta, ingest appends a
     * batch without retraining (`--refresh-entries` re-derives the
     * entry frame from the grown corpus), serve answers a query
-    * parquet through any engine of the r15 ladder. All three compose
+    * parquet on the hot RAM replica when its estimate fits the
+    * budget, else on the relational engine. All three compose
     * the gated operators unchanged — GraphAnnCliSpec pins the CLI
     * path hash-equal to the q243/q244 oracle faces. */
   private def flagOpt(rest: List[String], flag: String): Option[String] =
@@ -344,14 +345,14 @@ object Main {
   private def runGraphAnnServe(indexDir: String, queries: String,
       outDir: String, rest: List[String]): Unit = {
     val spark = session()
-    val engine = flagOpt(rest, "--engine").getOrElse("auto")
-    val (n, rows) = graft.operators.GraphAnnIndex.serve(spark,
-      indexDir, queries, outDir, engine,
+    val served = graft.operators.GraphAnnIndex.serve(spark,
+      indexDir, queries, outDir,
       beam = flagOpt(rest, "--beam").map(_.toInt).getOrElse(4),
       hops = flagOpt(rest, "--hops").map(_.toInt).getOrElse(8),
       k = flagOpt(rest, "--topk").map(_.toInt).getOrElse(8))
-    println(s">>> [graph-ann-serve] engine=$engine probes=$n " +
-      s"results=$rows")
+    println(s">>> [graph-ann-serve] engine=${served.engine} " +
+      s"est=${served.estBytes} budget=${served.budget} " +
+      s"probes=${served.probes} results=${served.rows}")
     spark.stop()
   }
 

@@ -7,11 +7,13 @@ import org.apache.spark.sql.functions._
   * (VERDICT r15 #1): build / ingest / serve entirely from persisted
   * artifacts — the operational trio IVF got with `ann-index` /
   * `ann-ingest` / `ann-query`, now for the NN-descent + beam-search
-  * family whose serving ladder ([[NnDescent.beamTopK]] driver walk,
-  * [[NnDescent.beamTopKBulk]] relational, [[NnDescent.beamTopKHot]]
-  * broadcast RAM replica) was previously reachable only through gated
-  * queries and specs. `graft.Main` wires these to the
-  * `graph-ann-build` / `graph-ann-ingest` / `graph-ann-serve` verbs.
+  * family, previously reachable only through gated queries and
+  * specs. `graft.Main` wires these to the `graph-ann-build` /
+  * `graph-ann-ingest` / `graph-ann-serve` verbs. Serving has one
+  * path ([[serve]]): the broadcast RAM replica
+  * ([[NnDescent.beamTopKHot]]) when its estimate fits the RAM
+  * budget, the relational engine ([[NnDescent.beamTopKBulk]]) over
+  * the pre-joined adjacency otherwise.
   *
   * Index layout under `indexDir` (all parquet):
   *  - `graph/`   (u, rank, nb, d2) — the k-NN graph;
@@ -34,8 +36,8 @@ import org.apache.spark.sql.functions._
   * Determinism: all three verbs compose the gated operators
   * unchanged (q231 build, q240 ingest, q243/q244 serve geometries are
   * the defaults), so a CLI-built index serves bit-identically to the
-  * oracle-gated faces — GraphAnnCliSpec pins exactly that, engine by
-  * engine.
+  * oracle-gated faces — GraphAnnCliSpec pins exactly that on both
+  * serve engines.
   */
 object GraphAnnIndex {
 
@@ -286,54 +288,57 @@ object GraphAnnIndex {
       .select(col("u"), col("nb"), col("nv")), s"$indexDir/adj")
   }
 
+  /** What one [[serve]] call did: the engine it picked (`hot` or
+    * `bulk`), the replica estimate and the budget that decided it,
+    * the probes read and the rows written. */
+  final case class Served(engine: String, estBytes: Long,
+      budget: Long, probes: Long, rows: Long)
+
   /** SERVE: top-k beam search for a parquet of query vectors, from
-    * the stored artifacts alone, through the chosen engine of the
-    * r15 ladder — `driver` ([[NnDescent.beamTopK]], per-hop jobs
-    * against the pre-joined adjacency), `bulk`
-    * ([[NnDescent.beamTopKBulk]], one fixed-depth relational plan),
-    * `hot` ([[NnDescent.beamTopKHot]], the broadcast RAM replica —
-    * RAM-guarded by hotArtifacts), or `auto`
-    * ([[NnDescent.beamServe]]'s batch-size dispatch, fed the batch
-    * size counted ONCE here — ADVICE r15). Writes (query_id, rank,
-    * node_id, d2) parquet to `outDir` and returns (nProbes, nRows).
-    * Geometry: `k` is the ANSWER count per probe (the ef-search
-    * return contract), independent of the stored graph's adjacency
-    * width (meta.k) — beam 4 / hops 8 / k 8 are the gated q243/q244
-    * serve defaults. */
+    * the stored artifacts alone. The engine follows the hot replica's
+    * RAM guard: when [[NnDescent.hotSize]]'s estimate fits `hotBudget`
+    * (default [[NnDescent.defaultHotBudget]], 40% of executor
+    * memory) the walk runs on the broadcast replica
+    * ([[NnDescent.beamTopKHot]], one job); otherwise it runs the
+    * relational plan over the pre-joined adjacency
+    * ([[NnDescent.beamTopKBulk]]), which is read only then. Both
+    * return the same rows bit-for-bit, and both refuse a stale corpus
+    * (adjacency ids missing from the stored vectors). Measured at
+    * sf0.1 (2000 vectors, local[4]): the replica, its build included,
+    * served 3–5× faster than the relational plan at every batch from
+    * 1 to 2000 probes (CHANGES.md).
+    *
+    * Writes (query_id, rank, node_id, d2) parquet to `outDir`, counted
+    * by the write itself. Geometry: `k` is the ANSWER count per probe
+    * (the ef-search return contract), independent of the stored
+    * graph's adjacency width (meta.k) — beam 4 / hops 8 / k 8 are the
+    * gated q243/q244 serve defaults. */
   def serve(spark: SparkSession, indexDir: String, queries: String,
-      outDir: String, engine: String = "auto", beam: Int = 4,
-      hops: Int = 8, k: Int = 8): (Long, Long) = {
-    val meta = readMeta(spark, indexDir)
+      outDir: String, beam: Int = 4, hops: Int = 8, k: Int = 8,
+      hotBudget: Option[Long] = None): Served = {
+    readMeta(spark, indexDir) // no index: fail fast, naming the build verb
     val graph = spark.read.parquet(s"$indexDir/graph")
       .select(col("u"), col("nb"))
     val vectors = spark.read.parquet(s"$indexDir/vectors")
     val entries = spark.read.parquet(s"$indexDir/entries")
-    val adj = spark.read.parquet(s"$indexDir/adj")
     val probes = asVecs(spark.read.parquet(queries))
       .select(col("id").as("query_id"), col("v").as("qv")).persist()
-    val n = probes.count()
-    var hot: Option[org.apache.spark.broadcast.Broadcast[
-      NnDescent.HotGraph]] = None
-    val res = engine match {
-      case "driver" =>
-        NnDescent.beamTopK(graph, vectors, probes, hops, beam,
-          k, entries, Some(adj))
-      case "bulk" =>
-        NnDescent.beamTopKBulk(graph, vectors, probes, hops, beam,
-          k, entries, Some(adj))
-      case "hot" =>
-        val h = NnDescent.hotArtifacts(graph, vectors, entries)
-        hot = Some(h)
-        NnDescent.beamTopKHot(h, probes, hops, beam, k)
-      case "auto" =>
-        NnDescent.beamServe(graph, vectors, probes, hops, beam,
-          k, entries, adj = Some(adj), knownBatch = Some(n))
-      case other => throw new IllegalArgumentException(
-        s"unknown engine '$other' — use auto|driver|bulk|hot")
-    }
-    res.write.mode(SaveMode.Overwrite).parquet(outDir)
-    probes.unpersist()
-    hot.foreach(_.destroy())
-    (n, spark.read.parquet(outDir).count())
+    try {
+      val n = probes.count()
+      val est = NnDescent.hotSize(graph, vectors, entries).bytes
+      val budget = hotBudget.getOrElse(NnDescent.defaultHotBudget(spark))
+      val hot = if (est > budget) None
+        else Some(NnDescent.replicate(graph, vectors, entries))
+      val res = hot match {
+        case Some(h) => NnDescent.beamTopKHot(h, probes, hops, beam, k)
+        case None =>
+          NnDescent.requireFresh(graph, vectors)
+          NnDescent.beamTopKBulk(graph, vectors, probes, hops, beam, k,
+            entries, Some(spark.read.parquet(s"$indexDir/adj")))
+      }
+      val rows = BroadcastRelease.writeCounted(res, outDir)
+      hot.foreach(_.destroy())
+      Served(if (hot.isDefined) "hot" else "bulk", est, budget, n, rows)
+    } finally probes.unpersist()
   }
 }

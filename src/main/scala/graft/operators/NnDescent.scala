@@ -259,15 +259,15 @@ object NnDescent {
     *  2. walks `hops` beam-search rounds over the stored neighbor
     *     lists (frontier ∪ frontier's neighbors, keep `beam`) and
     *     takes its `k` best over EVERYTHING the walk scored (the
-    *     visited-set return contract, same as beamTopK) → the new
+    *     visited-set return contract, same as beamTopKBulk) → the new
     *     node's adjacency;
     *  3. REVERSE-links: every (old ← new) edge competes into the old
     *     node's stored list under the same (d2, nb) total order —
     *     old nodes whose top-k actually admits a new neighbor emit
     *     their full updated list.
     *
-    * TWO walk engines, ONE semantics (the greedyTrace/beamTopK
-    * precedent, now with a parity gate): a batch of ≤ `smallBatch`
+    * TWO walk engines, ONE semantics (a driver walk in the
+    * greedyTrace shape, with a parity gate): a batch of ≤ `smallBatch`
     * vectors walks DRIVER-side — per hop one job joining a literal
     * frontier against the stored lists, the q232 serving shape,
     * because a 9-stage relational hop chain costs more in stage
@@ -548,7 +548,7 @@ object NnDescent {
       val cur = curDf(pos)
       // the hop collects the scored neighbor expansion in ONE job and
       // dedups + beam-cuts DRIVER-side (r17, VERDICT r16 #5 — the
-      // pattern beamTopK already uses): the frame is bounded at
+      // pattern newAdjDriver uses): the frame is bounded at
       // probes·beam·k rows by the walk contract, so an in-plan
       // DISTINCT + row_number window spent two keyed shuffles per hop
       // on data that fits in one task. distinctCand collapses exactly
@@ -572,129 +572,44 @@ object NnDescent {
     trace.result().toDF("query_id", "hop", "node_id", "d2")
   }
 
-  /** Beam-search TOP-K serving — the same walk as [[greedyTrace]] but
-    * returning each probe's k best DISTINCT nodes across EVERYTHING
-    * the walk scored (entry candidates + every hop's frontier ∪
-    * neighbor expansion): HNSW's ef-search return contract, where the
-    * answer set is the best of the visited set, not the final beam.
-    * Excludes a candidate equal to the probe's own query_id (the
-    * stored-probe convention every serve face uses). Per-hop cost is
-    * greedyTrace's (beam·k edges + vectors); the driver accumulates
-    * ≤ probes × (entryCand + hops·beam·(k+1)) scored rows — bounded
-    * by the probe contract, independent of corpus size. Returns
-    * (query_id, rank 1..k, node_id, d2). */
-  def beamTopK(graph: DataFrame, vecs: DataFrame, probes: DataFrame,
-      hops: Int, beam: Int, k: Int, entries: DataFrame): DataFrame =
-    beamTopK(graph, vecs, probes, hops, beam, k, entries, None)
-
-  /** [[beamTopK]] with an optional PRE-JOINED adjacency `adj`
-    * (u, nb, nv = nb's vector): the serving-tier layout (VERDICT r14
-    * #1) — storing each neighbor's vector NEXT TO the edge trades
-    * k× vector-storage inflation for HALF the per-hop join work
-    * (one equi-join instead of edge-join + vector-join), which is
-    * the dominant serve cost once the artifacts are hot. Scoring
-    * reads the same doubles through the same kernel, so results are
-    * bit-identical with and without `adj` (NnDescentSpec pins it);
-    * [[AnnIndexes.nnDescentServing]] persists the layout as the
-    * third artifact. */
-  def beamTopK(graph: DataFrame, vecs: DataFrame, probes: DataFrame,
-      hops: Int, beam: Int, k: Int, entries: DataFrame,
-      adj: Option[DataFrame]): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val hopAdj = adj.getOrElse(
-      graph.select(col("u"), col("nb"))
-        .join(vecs.select(col("id").as("nb"), col("v").as("nv")),
-          "nb")
-        .select(col("u"), col("nb"), col("nv")))
-    val pr = probes.select(col("query_id"), col("qv")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    val prDf = broadcast(pr.toDF("query_id", "qv"))
-    val seen = scala.collection.mutable.Map
-      .empty[(Long, Long), Double]
-    def note(rows: Seq[(Long, Long, Double)]): Unit =
-      rows.foreach { case (q, c, d) =>
-        if (c != q) seen.getOrElseUpdate((q, c), d) }
-    var pos: Seq[(Long, Long, Double)] = prDf.crossJoin(
-        entries.select(col("node_id"), col("v")))
-      .select(col("query_id"), col("node_id"),
-        d2(col("qv"), col("v")).as("d2"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSeq.sortBy(p => (p._1, p._3, p._2))
-    note(pos)
-    pos = pos.groupBy(_._1).values
-      .flatMap(_.sortBy(p => (p._3, p._2)).take(beam)).toSeq
-    def curDf(p: Seq[(Long, Long, Double)]): DataFrame =
-      p.toDF("query_id", "node_id", "d2")
-        .join(prDf, "query_id")
-        .select(col("query_id"), col("qv"), col("node_id"), col("d2"))
-    // EXACT fixed-point early exit (VERDICT r14 #1: per-hop driver
-    // jobs are the serving cost — don't pay for hops that provably
-    // change nothing): stepped is a pure function of the frontier,
-    // so once the frontier survives a hop unchanged, every remaining
-    // hop would recompute the same stepped (already in `seen`) and
-    // the same frontier — the result is decided. Bit-identity with
-    // the full-hop walk is pinned by the beamTopKBulk parity spec,
-    // whose bulk engine always runs all `hops`.
-    var h = 0
-    var fixed = false
-    while (h < hops && !fixed) {
-      h += 1
-      // dedup happens DRIVER-side (the collected frame is ≤ probes ×
-      // beam·k rows by contract) — a .distinct() here would spend a
-      // shuffle per hop on a frame that fits in one task
-      val stepped = curDf(pos)
-        .join(hopAdj.select(col("u").as("node_id"), col("nb"),
-          col("nv")), "node_id")
-        .select(col("query_id"), col("nb").as("cand"),
-          d2(col("qv"), col("nv")).as("d2"))
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getDouble(2))).toSeq
-      note(stepped)
-      val next = distinctCand(pos ++ stepped).groupBy(_._1).values
-        .flatMap(_.sortBy(p => (p._3, p._2)).take(beam)).toSeq
-      fixed = next.sortBy(p => (p._1, p._3, p._2)) ==
-        pos.sortBy(p => (p._1, p._3, p._2))
-      pos = next
-    }
-    seen.toSeq.map { case ((q, c), d) => (q, c, d) }
-      .groupBy(_._1).values.flatMap { rows =>
-        rows.sortBy(r => (r._3, r._2)).take(k).zipWithIndex
-          .map { case ((q, c, d), i) => (q, i + 1, c, d) }
-      }.toSeq.sortBy(r => (r._1, r._2))
-      .toDF("query_id", "rank", "node_id", "d2")
-  }
-
-  /** [[beamTopK]] as a fully RELATIONAL unrolled plan — the BULK
-    * serving engine (VERDICT r14 #1): [[beamTopK]]'s driver walk pays
-    * one collect-job per hop whose stage-scheduling cost dominates
-    * compute for probe-sized batches AND whose driver-side visited
-    * set grows linearly in probes — fine at 5, wrong at 10⁶. This
-    * path is the [[newAdjRelational]] shape keyed on query_id: entry
+  /** Beam-search TOP-K serving as a fully RELATIONAL unrolled plan —
+    * the scan-tier engine, for corpora past the hot replica's RAM
+    * budget. The walk is [[greedyTrace]]'s, but each probe returns its
+    * k best DISTINCT nodes across EVERYTHING the walk scored (entry
+    * candidates + every hop's frontier ∪ neighbor expansion): HNSW's
+    * ef-search return contract, where the answer set is the best of
+    * the visited set, not the final beam. The walk may route THROUGH
+    * a stored probe's own node but never returns it (the self-
+    * exclusion applies to the answer set, not the beam). Returns
+    * (query_id, rank 1..k, node_id, d2).
+    *
+    * Shape: the [[newAdjRelational]] plan keyed on query_id — entry
     * scoring, `hops` beam rounds (equi-joins on the frontier, windows
-    * partitioned per probe), and the visited-set top-k all ride ONE
-    * fixed-depth plan whose cost amortizes over any batch size, with
-    * per-hop `localCheckpoint` (materializes AND truncates lineage —
-    * each hop frame feeds both the next frontier and the final
-    * visited union, the multi-referenced-subtree trap).
+    * partitioned per probe), and the visited-set top-k ride ONE
+    * fixed-depth plan whose cost amortizes over any batch size and
+    * whose state stays executor-side, with per-hop `localCheckpoint`
+    * (materializes AND truncates lineage — each hop frame feeds both
+    * the next frontier and the final visited union, the
+    * multi-referenced-subtree trap).
     *
-    * Semantics are [[beamTopK]]'s, BIT-IDENTICAL (NnDescentSpec pins
-    * equality on a fixture and the serve sweep re-checks it at sf0.1):
-    * same ArrayL2Sq kernel, same (d2, id) total orders, the walk may
-    * route THROUGH a stored probe's own node but never returns it
-    * (the self-exclusion applies to the answer set, not the beam),
-    * and dedup collapses bit-stable recomputes exactly as the
-    * driver's first-write-wins map does.
-    *
-    * Engine choice is [[beamServe]]'s job; calling this directly is
-    * for specs and sweeps. */
+    * BIT-IDENTICAL to [[beamTopKHot]] (NnDescentSpec pins equality on
+    * a fixture; q243 and q244 hash both against one oracle): same
+    * ArrayL2Sq kernel, same (d2, id) total orders, dedup keyed on
+    * (query_id, cand). [[GraphAnnIndex.serve]] picks between the
+    * two. */
   def beamTopKBulk(graph: DataFrame, vecs: DataFrame,
       probes: DataFrame, hops: Int, beam: Int, k: Int,
       entries: DataFrame): DataFrame =
     beamTopKBulk(graph, vecs, probes, hops, beam, k, entries, None)
 
-  /** [[beamTopKBulk]] with the optional pre-joined adjacency — see
-    * the [[beamTopK]] `adj` overload. */
+  /** [[beamTopKBulk]] with an optional PRE-JOINED adjacency `adj`
+    * (u, nb, nv = nb's vector): the serving-tier layout — storing
+    * each neighbor's vector NEXT TO the edge trades k× vector-storage
+    * inflation for HALF the per-hop join work (one equi-join instead
+    * of edge-join + vector-join). Scoring reads the same doubles
+    * through the same kernel, so results are bit-identical with and
+    * without `adj` (NnDescentSpec pins it); `graph` and `vecs` are
+    * unused when `adj` is given. */
   def beamTopKBulk(graph: DataFrame, vecs: DataFrame,
       probes: DataFrame, hops: Int, beam: Int, k: Int,
       entries: DataFrame, adj: Option[DataFrame]): DataFrame = {
@@ -740,46 +655,6 @@ object NnDescent {
         col("cand").as("node_id"), col("d2"))
   }
 
-  /** Beam-search top-k serving with the ENGINE CHOSEN BY BATCH SIZE —
-    * the [[appendToGraph]] dual-engine protocol applied to serving
-    * (VERDICT r14 #1): batches ≤ `smallBatch` probes walk DRIVER-side
-    * ([[beamTopK]] — per hop one lightweight job; the relational
-    * plan's fixed stage depth costs more than it computes at probe
-    * scale), larger batches ride the fully relational
-    * [[beamTopKBulk]], whose cost/probe collapses as the batch grows
-    * and whose memory stays executor-side (the driver path's visited
-    * set is probes-linear). Outputs are bit-identical by the parity
-    * spec, so the switch is invisible to every hash gate. The
-    * threshold default sits at the MEASURED crossover (VERDICT r15
-    * #6; the r15 sweep stopped at 2000 probes with the driver still
-    * ahead, so the old 1024 default encoded a crossover nobody had
-    * observed — the r16 `AnnServeSweep --crossover` run extended the
-    * axis and found it): on local[32] at sf0.1 the driver walk keeps
-    * a shrinking edge through 2000 probes (1.20 vs 1.30 ms/probe),
-    * the bulk engine wins from 6000 (0.68 vs 0.88) and widens at
-    * 20000 (0.38 vs 0.88 — the driver's per-hop collect volume and
-    * O(probes) visited state are the bend), parity ok at every batch
-    * (BASELINE.md r16). On a real cluster the driver's per-hop
-    * round-trips also pay network latency, so the measured local
-    * crossover is the CONSERVATIVE (driver-favoring) bound. */
-  def beamServe(graph: DataFrame, vecs: DataFrame, probes: DataFrame,
-      hops: Int, beam: Int, k: Int, entries: DataFrame,
-      smallBatch: Int = 2048,
-      adj: Option[DataFrame] = None,
-      knownBatch: Option[Long] = None): DataFrame = {
-    // engine dispatch reads the batch size from the caller's hint
-    // when one is given (ADVICE r15: the unconditional count here
-    // re-evaluated the probe frame's full upstream plan once per
-    // serve, purely to pick an engine); a hint-less call still counts
-    // once — callers in a serving loop should pass knownBatch or
-    // persist the probe frame.
-    val batch = knownBatch.getOrElse(probes.count())
-    if (batch <= smallBatch)
-      beamTopK(graph, vecs, probes, hops, beam, k, entries, adj)
-    else
-      beamTopKBulk(graph, vecs, probes, hops, beam, k, entries, adj)
-  }
-
   /** RAM-RESIDENT serving artifacts: the graph's adjacency, the
     * touched vectors, and the entry candidates collected once and
     * broadcast to every executor — the deployment shape every
@@ -788,8 +663,8 @@ object NnDescent {
     * node). The RAM precondition — corpus × (k edges + dim doubles)
     * must fit executor memory, the envelope real HNSW deployments
     * live in (≈10⁸ vectors on big-memory nodes) — is ENFORCED by
-    * [[hotArtifacts]], not just documented. Beyond it,
-    * [[beamTopKBulk]] is the scan-tier engine. Neighbor lists are
+    * [[hotArtifacts]], not just documented; [[GraphAnnIndex.serve]]
+    * falls back to [[beamTopKBulk]] past it. Neighbor lists are
     * stored sorted by id (dedup insurance only — the walk's orders
     * are all (d2, id)). */
   final case class HotGraph(
@@ -842,39 +717,58 @@ object NnDescent {
     (num.toDouble * mult).toLong
   }
 
-  /** Build the broadcast RAM replica — with the RAM contract ENFORCED
-    * (VERDICT r15 #3: this was the one operator in the repo whose
-    * failure mode at 100× scale was an unexplained OOM rather than a
-    * slow plan). Before collecting anything, the replica size is
-    * estimated from the artifacts' own counts ([[estimateHotBytes]] —
-    * three cheap count jobs over the stored frames) and checked
-    * against `maxBytes` (default [[defaultHotBudget]]: 40% of
-    * executor memory); past the budget the call REFUSES with the
-    * numbers and the fallback engine named, instead of OOMing inside
-    * a collect. After collecting, every neighbor id the adjacency
-    * references must resolve in `vecs` (ADVICE r15: a stale corpus
-    * after appends used to surface as a bare NoSuchElementException
-    * inside an executor task mid-walk) — the mismatch fails fast
-    * here, naming the missing ids. */
-  def hotArtifacts(graph: DataFrame, vecs: DataFrame,
-      entries: DataFrame, maxBytes: Option[Long] = None)
-      : org.apache.spark.broadcast.Broadcast[HotGraph] = {
+  /** The [[HotGraph]] replica's size BEFORE building it:
+    * [[estimateHotBytes]] over the artifacts' own counts (three count
+    * jobs and one head over the stored frames, nothing collected). */
+  final case class HotSize(nVecs: Long, nEdges: Long, dim: Int,
+      bytes: Long)
+
+  def hotSize(graph: DataFrame, vecs: DataFrame,
+      entries: DataFrame): HotSize = {
     val nVecs = vecs.count()
     val nEdges = graph.count()
     val nEntries = entries.count()
     val dim =
       if (nVecs == 0L) 0
       else vecs.select(size(col("v"))).head().getInt(0)
-    val est = estimateHotBytes(nVecs, nEdges, dim, nEntries)
+    HotSize(nVecs, nEdges, dim,
+      estimateHotBytes(nVecs, nEdges, dim, nEntries))
+  }
+
+  /** Build the broadcast RAM replica — with the RAM contract ENFORCED
+    * (VERDICT r15 #3: this was the one operator in the repo whose
+    * failure mode at 100× scale was an unexplained OOM rather than a
+    * slow plan). Before collecting anything, the replica size is
+    * estimated ([[hotSize]]) and checked against `maxBytes` (default
+    * [[defaultHotBudget]]: 40% of executor memory); past the budget
+    * the call REFUSES with the numbers and the fallback engine named,
+    * instead of OOMing inside a collect. */
+  def hotArtifacts(graph: DataFrame, vecs: DataFrame,
+      entries: DataFrame, maxBytes: Option[Long] = None)
+      : org.apache.spark.broadcast.Broadcast[HotGraph] = {
+    val est = hotSize(graph, vecs, entries)
     val budget = maxBytes.getOrElse(defaultHotBudget(vecs.sparkSession))
-    require(est <= budget,
-      f"hotArtifacts: estimated replica size $est%,d bytes " +
-        f"($nVecs%,d vectors x dim $dim + $nEdges%,d edges) exceeds " +
+    require(est.bytes <= budget,
+      f"hotArtifacts: estimated replica size ${est.bytes}%,d bytes " +
+        f"(${est.nVecs}%,d vectors x dim ${est.dim} + " +
+        f"${est.nEdges}%,d edges) exceeds " +
         f"the RAM budget $budget%,d bytes (40%% of executor memory, " +
         "or the explicit maxBytes arg). The hot tier is for corpora " +
         "that fit executor RAM; past it serve with beamTopKBulk (the " +
         "scan-tier relational engine, same results bit-for-bit) or " +
         "raise maxBytes deliberately.")
+    replicate(graph, vecs, entries)
+  }
+
+  /** Collect and broadcast the replica, unguarded: the caller has
+    * already weighed [[hotSize]] against its budget. Every neighbor
+    * id the adjacency references must resolve in `vecs` (ADVICE r15:
+    * a stale corpus after appends used to surface as a bare
+    * NoSuchElementException inside an executor task mid-walk) — the
+    * mismatch fails fast here, naming the missing ids. */
+  private[graft] def replicate(graph: DataFrame, vecs: DataFrame,
+      entries: DataFrame)
+      : org.apache.spark.broadcast.Broadcast[HotGraph] = {
     val adj = graph.select(col("u"), col("nb")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._1).map { case (u, es) =>
@@ -885,12 +779,8 @@ object NnDescent {
     val missing = adj.valuesIterator.flatten
       .filter(id => !vec.contains(id)).toSet
     require(missing.isEmpty,
-      s"hotArtifacts: the adjacency references ${missing.size} " +
-        s"neighbor id(s) absent from vecs (e.g. " +
-        s"${missing.toSeq.sorted.take(10).mkString(", ")}) — the " +
-        "corpus is stale relative to the graph (appended batches " +
-        "missing from vecs?). Pass the grown corpus the graph was " +
-        "built/appended over.")
+      "hotArtifacts: " +
+        staleCorpus(s"${missing.size} neighbor id(s)", missing.toSeq))
     val ent = entries.select(col("node_id"), col("v")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
@@ -898,17 +788,38 @@ object NnDescent {
       HotGraph(adj, vec, ent))
   }
 
-  /** [[beamTopK]] against RAM-resident artifacts — ONE job, each
-    * task walking its probes locally (the hot-tier engine, VERDICT
-    * r14 #1: the per-hop jobs ARE the driver/bulk engines' cost; a
-    * RAM replica makes the whole walk one map). Scoring replicates
-    * [[graft.expressions.ArrayL2Sq]]'s exact IEEE fold (d = x−y,
-    * acc += d·d, left to right), every order is the same (d2, id)
-    * total order, dedup and self-exclusion follow the driver walk —
-    * outputs are BIT-IDENTICAL across all three engines
-    * (NnDescentSpec pins it; the serve sweep re-checks per batch).
-    * Per-probe state is O(entryCand + hops·beam·k) and the walk is a
-    * pure per-row function — partition count cannot change results. */
+  /** [[replicate]]'s stale-corpus check for the relational engine,
+    * which never collects the corpus: one anti-join aggregate over the
+    * stored edge list and vectors, naming the smallest missing id. */
+  private[graft] def requireFresh(graph: DataFrame,
+      vecs: DataFrame): Unit = {
+    val r = graph.select(col("nb"))
+      .join(vecs.select(col("id").as("nb")), Seq("nb"), "left_anti")
+      .agg(count(lit(1)), min(col("nb"))).head()
+    val n = r.getLong(0)
+    require(n == 0L,
+      staleCorpus(s"$n edge(s) to neighbor id(s)", Seq(r.getLong(1))))
+  }
+
+  private def staleCorpus(missing: String, sample: Seq[Long]): String =
+    s"the adjacency references $missing absent from vecs (e.g. " +
+      s"${sample.sorted.take(10).mkString(", ")}) — the corpus is stale " +
+      "relative to the graph (appended batches missing from vecs?). " +
+      "Pass the grown corpus the graph was built/appended over."
+
+  /** Beam-search top-k ([[beamTopKBulk]]'s return contract) against
+    * RAM-resident artifacts — ONE job, each task walking its probes
+    * locally (the hot-tier engine: the relational engine pays a job
+    * per hop; a RAM replica makes the whole walk one map). Scoring
+    * replicates [[graft.expressions.ArrayL2Sq]]'s exact IEEE fold
+    * (d = x−y, acc += d·d, left to right), every order is the same
+    * (d2, id) total order, dedup keys on the node id and the probe's
+    * own id is never returned — outputs are BIT-IDENTICAL to
+    * [[beamTopKBulk]] (NnDescentSpec pins it). The walk stops early
+    * at a fixed point: once a hop leaves the frontier unchanged, every
+    * later hop would rescore the same set. Per-probe state is
+    * O(entryCand + hops·beam·k) and the walk is a pure per-row
+    * function — partition count cannot change results. */
   def beamTopKHot(
       hot: org.apache.spark.broadcast.Broadcast[HotGraph],
       probes: DataFrame, hops: Int, beam: Int, k: Int): DataFrame = {

@@ -1436,12 +1436,12 @@ object VectorQueries {
     * persisted artifacts ([[graft.operators.NnDescent.beamTopKBulk]]
     * — the ef-search RETURN contract: each probe's k best DISTINCT
     * non-self nodes across EVERYTHING the walk scored, not the final
-    * beam q232's trace shows). Runs the fully RELATIONAL engine so
-    * the r15 serving ladder's scan-tier path sits behind the oracle
-    * gate directly; the driver walk and the RAM-resident hot engine
-    * are proved bit-identical to it (NnDescentSpec parity + the
-    * AnnServeSweep per-batch checks), so this one hash gates all
-    * three. Five reversed-stored-vector probes (the q232 convention),
+    * beam q232's trace shows). Runs the fully RELATIONAL engine, the
+    * scan-tier path `graph-ann-serve` falls back to past the hot
+    * replica's RAM budget, so it sits behind the oracle gate
+    * directly; q244 gates the hot engine against the same SQL, and
+    * the NnDescentSpec parity spec pins the two bit-identical. Five
+    * reversed-stored-vector probes (the q232 convention),
     * hops=8, beam=4, k=8; the oracle re-derives the graph, the entry
     * frame, all eight visited-set hops, and the self-excluded top-8
     * (the q240 CTE shape pointed at probes instead of new ids). */
@@ -1517,8 +1517,8 @@ object VectorQueries {
 
   /** Graph-based ANN, face 5: the HOT engine behind its OWN oracle
     * gate (VERDICT r15 #4) — q243 hash-gates the relational bulk
-    * engine and the parity specs carry that gate to the other two
-    * engines transitively; this face runs the PRODUCTION serving
+    * engine and the parity spec carries that gate to the hot engine
+    * transitively; this face runs the PRODUCTION serving
     * tier itself ([[graft.operators.NnDescent.beamTopKHot]]: the
     * [[AnnIndexes.hotReplica]] broadcast RAM replica, the whole walk
     * ONE job) on the SAME probes against the SAME DuckDB SQL (shared

@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** The one session factory: the suite's own session carries every
   * setting [[GraftSession]] owns, `SPARK_GRAFT_CPUS` has one meaning
-  * everywhere, no second builder creeps back into the tree, and the
-  * streaming replay width stays under the shuffle-writer threshold. */
+  * everywhere, no second builder creeps back into the tree, no dev
+  * main sits in `src/main`, and the streaming replay width stays
+  * under the shuffle-writer threshold. */
 class GraftSessionSpec extends GraftSuite {
 
   test("the shared test session carries every setting GraftSession owns") {
@@ -42,23 +43,43 @@ class GraftSessionSpec extends GraftSuite {
     assert(sc("spark.sql.shuffle.partitions") === "3")
   }
 
-  test("no SparkSession builder call under src/ outside " +
-      "GraftSession.scala (comments ignored)") {
-    val root = Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
+  private lazy val root: Path =
+    Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
       .takeWhile(_ != null).find(p => Files.exists(p.resolve("build.sbt")))
       .getOrElse(fail("project root (build.sbt) not found"))
-    val builder = """SparkSession\s*\.\s*[bB]uilder""".r
+
+  /** Scala sources under `dirs`, with their comments stripped. */
+  private def sources(dirs: String*): Seq[(Path, String)] = {
     def code(src: String): String =
       src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
-    val files: Seq[Path] = Seq("src/main/scala", "src/test/scala")
-      .flatMap(d => Files.walk(root.resolve(d)).iterator.asScala)
+    dirs.flatMap(d => Files.walk(root.resolve(d)).iterator.asScala)
       .filter(_.toString.endsWith(".scala"))
-    assert(files.exists(_.getFileName.toString == "GraftSession.scala"))
+      .map(f => (f, code(Files.readString(f))))
+  }
+
+  test("no SparkSession builder call under src/ outside " +
+      "GraftSession.scala (comments ignored)") {
+    val builder = """SparkSession\s*\.\s*[bB]uilder""".r
+    val files = sources("src/main/scala", "src/test/scala")
+    assert(files.exists(_._1.getFileName.toString == "GraftSession.scala"))
     val offenders = files
-      .filter(_.getFileName.toString != "GraftSession.scala")
-      .filter(f => builder.findFirstIn(code(Files.readString(f))).nonEmpty)
+      .filter(_._1.getFileName.toString != "GraftSession.scala")
+      .filter(f => builder.findFirstIn(f._2).nonEmpty).map(_._1)
     assert(offenders.isEmpty,
       s"build sessions through GraftSession: ${offenders.mkString(", ")}")
+  }
+
+  test("src/main has no dev mains: def main( only in Main, Verify, " +
+      "Bench, Explain, Smoke and QProbe (comments ignored)") {
+    val mains = Set("Main", "Verify", "Bench", "Explain", "Smoke", "QProbe")
+      .map(_ + ".scala")
+    val main = """def\s+main\s*\(""".r
+    val withMain = sources("src/main/scala")
+      .filter(f => main.findFirstIn(f._2).nonEmpty)
+      .map(_._1.getFileName.toString).toSet
+    assert(withMain.contains("Main.scala"))
+    assert(withMain.subsetOf(mains),
+      s"dev mains in src/main: ${(withMain -- mains).mkString(", ")}")
   }
 
   test("the streaming replay width keeps the bypass shuffle writer") {

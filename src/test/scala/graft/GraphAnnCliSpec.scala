@@ -8,7 +8,7 @@ import graft.operators.GraphAnnIndex
 
 /** The graph-ANN CLI surface (VERDICT r15 #1): build → ingest → serve
   * driven from PERSISTED ARTIFACTS ALONE — the dedup-ingest /
-  * ann-query pattern — with every serve engine hash-equal to the
+  * ann-query pattern — with both serve engines hash-equal to the
   * oracle-gated q243/q244 faces on the same probes. The CLI composes
   * the gated operators unchanged, so equality here chains the user
   * surface into the DuckDB oracle. */
@@ -27,8 +27,10 @@ class GraphAnnCliSpec extends GraftSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
 
-  test("build → serve from artifacts alone: all four engines return " +
-      "the q243/q244 gated faces' rows bit-for-bit on the same probes") {
+  test("build → serve from artifacts alone: the default budget picks " +
+      "hot, a refused budget picks bulk, both return the q243/q244 " +
+      "gated faces' rows bit-for-bit on the same probes, and a stale " +
+      "corpus fails on both") {
     val idx = dir("graft_gann_idx") + "/idx"
     val (n, e) = GraphAnnIndex.build(spark,
       s"$sf/embeddings.parquet", idx)
@@ -40,18 +42,46 @@ class GraphAnnCliSpec extends GraftSuite {
     Tables.embeddings(spark, sf).filter($"vec_id" < 5)
       .select($"vec_id", reverse($"embedding").as("embedding"))
       .write.mode("overwrite").parquet(qDir)
-    val gated = Registry
-      .byName("q243_graph_ann_serve_topk_oracled").run(spark, sf)
+    def face(name: String): Seq[ServeRow] = Registry.byName(name)
+      .run(spark, sf)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
+    val gated = face("q243_graph_ann_serve_topk_oracled")
     assert(gated.size === 40)
-    for (engine <- Seq("auto", "driver", "bulk", "hot")) {
+    assert(face("q244_graph_ann_serve_hot_oracled") === gated)
+    for ((budget, engine) <- Seq(None -> "hot", Some(0L) -> "bulk")) {
       val out = dir(s"graft_gann_out_$engine")
-      val (np, rows) = GraphAnnIndex.serve(spark, idx, qDir, out,
-        engine)
-      assert(np === 5L && rows === 40L, s"engine $engine")
+      val served = GraphAnnIndex.serve(spark, idx, qDir, out,
+        hotBudget = budget)
+      assert(served.engine === engine, s"budget $budget")
+      assert(served.estBytes > 0L &&
+        (served.estBytes <= served.budget) === (engine == "hot"),
+        s"$served")
+      assert(served.probes === 5L && served.rows === 40L,
+        s"engine $engine")
       assert(servedRows(out) === gated,
         s"engine $engine diverged from the gated face")
+    }
+    // a stale corpus (an adjacency id missing from the stored
+    // vectors) fails fast on either engine instead of serving
+    val victim = spark.read.parquet(s"$idx/graph").head()
+      .getAs[Long]("nb")
+    val fresh = s"$idx/vectors"
+    val staleDir = dir("graft_gann_stale") + "/v"
+    spark.read.parquet(fresh).filter($"id" =!= victim)
+      .write.parquet(staleDir)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(fresh), true)
+    fs.rename(new org.apache.hadoop.fs.Path(staleDir),
+      new org.apache.hadoop.fs.Path(fresh))
+    for (budget <- Seq(None, Some(0L))) {
+      val err = intercept[IllegalArgumentException] {
+        GraphAnnIndex.serve(spark, idx, qDir, dir("graft_gann_out_st"),
+          hotBudget = budget)
+      }
+      assert(err.getMessage.contains("stale") &&
+        err.getMessage.contains(victim.toString), s"budget $budget")
     }
   }
 
@@ -113,14 +143,16 @@ class GraphAnnCliSpec extends GraftSuite {
       GraphAnnIndex.ingest(spark, bDir, idx)
     }
     assert(err.getMessage.contains("already in the index"))
-    // serve the ingested ids from the grown artifacts — every engine
-    // agrees and returns 8 ranked non-self rows per probe
-    val outs = Seq("driver", "hot").map { engine =>
-      val out = dir(s"graft_gann_out2_$engine")
-      val (np, rows) = GraphAnnIndex.serve(spark, idx, bDir, out,
-        engine)
-      assert(np === 5L && rows === 40L, s"engine $engine")
-      servedRows(out)
+    // serve the ingested ids from the grown artifacts — both engines
+    // agree and return 8 ranked non-self rows per probe
+    val outs = Seq(None -> "hot", Some(0L) -> "bulk").map {
+      case (budget, engine) =>
+        val out = dir(s"graft_gann_out2_$engine")
+        val served = GraphAnnIndex.serve(spark, idx, bDir, out,
+          hotBudget = budget)
+        assert(served.engine === engine && served.probes === 5L &&
+          served.rows === 40L, s"$served")
+        servedRows(out)
     }
     assert(outs(0) === outs(1), "post-ingest engines diverged")
     outs(0).groupBy(_._1).foreach { case (q, rows) =>

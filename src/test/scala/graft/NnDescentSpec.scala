@@ -102,38 +102,48 @@ class NnDescentSpec extends GraftSuite {
     }
   }
 
-  test("beamTopK (the ef-search return contract): k distinct non-self " +
-      "nodes per probe, d2 nondecreasing in rank, every returned " +
-      "node was actually scored (d2 exact), and on clustered data " +
-      "the visited-set top-8 lands in the probe's own cluster") {
+  test("beamTopKBulk and beamTopKHot (the ef-search return contract): " +
+      "k distinct non-self nodes per probe, d2 nondecreasing in rank, " +
+      "every returned node was actually scored (d2 exact), and on " +
+      "clustered data the visited-set top-8 lands in the probe's own " +
+      "cluster") {
     val vecs = clustered()
     val graph = NnDescent.knnGraph(vecs, k = 8, cap = 16, rounds = 3)
       .select($"u", $"nb")
     val entries = NnDescent.entryCandidates(vecs, entryCand = 32)
     val probes = vecs.filter($"id".isin(5L, 205L, 390L))
       .select($"id".as("query_id"), $"v".as("qv"))
-    val got = NnDescent.beamTopK(graph, vecs, probes, hops = 8,
-        beam = 4, k = 8, entries = entries)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3)))
-    got.groupBy(_._1).foreach { case (q, rows) =>
-      assert(rows.length === 8, s"probe $q returned ${rows.length}")
-      assert(rows.map(_._2).sorted.toSeq === (1 to 8))
-      assert(!rows.exists(_._3 == q), s"probe $q returned itself")
-      val byRank = rows.sortBy(_._2).map(_._4)
-      assert(byRank.zip(byRank.tail).forall { case (a, b) => a <= b },
-        s"probe $q d2 not monotone in rank")
-      // within-cluster d2 ~ 0.36 expected, inter-cluster O(10): the
-      // whole answer set should sit inside the probe's cluster
-      assert(byRank.last < 1.0,
-        s"probe $q rank-8 d2 ${byRank.last} left the cluster")
+    val hot = NnDescent.hotArtifacts(graph, vecs, entries)
+    for ((engine, df) <- Seq(
+        "bulk" -> NnDescent.beamTopKBulk(graph, vecs, probes, hops = 8,
+          beam = 4, k = 8, entries = entries),
+        "hot" -> NnDescent.beamTopKHot(hot, probes, hops = 8, beam = 4,
+          k = 8))) {
+      val got = df.collect().map(r => (r.getLong(0), r.getInt(1),
+        r.getLong(2), r.getDouble(3)))
+      assert(got.map(_._1).distinct.length === 3, engine)
+      got.groupBy(_._1).foreach { case (q, rows) =>
+        assert(rows.length === 8,
+          s"$engine: probe $q returned ${rows.length}")
+        assert(rows.map(_._2).sorted.toSeq === (1 to 8))
+        assert(!rows.exists(_._3 == q),
+          s"$engine: probe $q returned itself")
+        val byRank = rows.sortBy(_._2).map(_._4)
+        assert(byRank.zip(byRank.tail).forall { case (a, b) => a <= b },
+          s"$engine: probe $q d2 not monotone in rank")
+        // within-cluster d2 ~ 0.36 expected, inter-cluster O(10): the
+        // whole answer set should sit inside the probe's cluster
+        assert(byRank.last < 1.0,
+          s"$engine: probe $q rank-8 d2 ${byRank.last} left the cluster")
+      }
     }
+    hot.destroy()
   }
 
-  test("beamTopK and beamTopKBulk are BIT-IDENTICAL (VERDICT r14 #1: " +
-      "the serve dispatcher switches engines on batch size, so the " +
-      "switch must be invisible to every hash gate), including a " +
-      "stored probe that must route through but never return itself") {
+  test("beamTopKBulk and beamTopKHot are BIT-IDENTICAL (graph-ann-serve " +
+      "switches engines on the replica's RAM budget, so the switch " +
+      "must be invisible to every hash gate), including a stored probe " +
+      "that must route through but never return itself") {
     val vecs = clustered(20)
     val graph = NnDescent.knnGraph(vecs, k = 8, cap = 16, rounds = 2)
       .select($"u", $"nb")
@@ -146,47 +156,32 @@ class NnDescentSpec extends GraftSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
-    val driver = rows(NnDescent.beamTopK(graph, vecs, probes,
-      hops = 8, beam = 4, k = 8, entries = entries))
     val bulk = rows(NnDescent.beamTopKBulk(graph, vecs, probes,
       hops = 8, beam = 4, k = 8, entries = entries))
-    assert(driver.nonEmpty)
-    assert(driver === bulk,
-      "serve engines diverged — the dispatch threshold is load-bearing")
-    // the dispatcher routes to each engine by the threshold alone
-    val viaSmall = rows(NnDescent.beamServe(graph, vecs, probes,
-      hops = 8, beam = 4, k = 8, entries = entries, smallBatch = 1024))
-    val viaBulk = rows(NnDescent.beamServe(graph, vecs, probes,
-      hops = 8, beam = 4, k = 8, entries = entries, smallBatch = 0))
-    assert(viaSmall === driver && viaBulk === driver)
-    // the pre-joined serving layout (adj = u, nb, nv) reads the same
-    // doubles through the same kernel — bit-identical on both engines
-    val adj = graph.join(vecs.select($"id".as("nb"), $"v".as("nv")),
-      "nb").select($"u", $"nb", $"nv")
-    val adjDriver = rows(NnDescent.beamTopK(graph, vecs, probes,
-      hops = 8, beam = 4, k = 8, entries = entries, adj = Some(adj)))
-    val adjBulk = rows(NnDescent.beamTopKBulk(graph, vecs, probes,
-      hops = 8, beam = 4, k = 8, entries = entries, adj = Some(adj)))
-    assert(adjDriver === driver && adjBulk === driver)
+    assert(bulk.nonEmpty)
     // the RAM-resident hot engine (one job, broadcast artifacts)
     // replicates the same walk executor-side
     val hot = NnDescent.hotArtifacts(graph, vecs, entries)
     val hotRows = rows(NnDescent.beamTopKHot(hot, probes,
       hops = 8, beam = 4, k = 8))
-    assert(hotRows === driver,
-      "hot engine diverged from the driver walk")
+    assert(hotRows === bulk,
+      "serve engines diverged — the budget fallback is load-bearing")
+    // the pre-joined serving layout (adj = u, nb, nv) reads the same
+    // doubles through the same kernel — bit-identical
+    val adj = graph.join(vecs.select($"id".as("nb"), $"v".as("nv")),
+      "nb").select($"u", $"nb", $"nv")
+    val adjBulk = rows(NnDescent.beamTopKBulk(graph, vecs, probes,
+      hops = 8, beam = 4, k = 8, entries = entries, adj = Some(adj)))
+    assert(adjBulk === bulk)
     // parity at the QUALITY-SWEEP geometry too (beam 16, hops 12):
     // the exhibits publish hot-engine recalls there, so the gate
     // must cover the wide beam, not just the gated faces' beam 4
-    val driver16 = rows(NnDescent.beamTopK(graph, vecs, probes,
-      hops = 12, beam = 16, k = 8, entries = entries))
     val hot16 = rows(NnDescent.beamTopKHot(hot, probes,
       hops = 12, beam = 16, k = 8))
     val bulk16 = rows(NnDescent.beamTopKBulk(graph, vecs, probes,
       hops = 12, beam = 16, k = 8, entries = entries))
     hot.destroy()
-    assert(hot16 === driver16 && bulk16 === driver16,
-      "engines diverged at the wide-beam geometry")
+    assert(hot16 === bulk16, "engines diverged at the wide-beam geometry")
   }
 
   test("appendToGraph (the q240 ingest face): on a planted clone the " +
@@ -286,7 +281,7 @@ class NnDescentSpec extends GraftSuite {
     assert(NnDescent.estimateHotBytes(200, 1600, 8) >
       1600 * 8L + 200 * 8 * 8L)
     // under-budget (the default budget): unchanged behavior — same
-    // rows as the driver walk (the existing parity contract)
+    // rows as the relational engine (the existing parity contract)
     val probes = vecs.filter($"id".isin(5L, 105L))
       .select($"id".as("query_id"), $"v".as("qv"))
     val hot = NnDescent.hotArtifacts(graph, vecs, entries)
@@ -294,11 +289,11 @@ class NnDescentSpec extends GraftSuite {
       beam = 4, k = 8).collect().map(r => (r.getLong(0), r.getInt(1),
       r.getLong(2), r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
     hot.destroy()
-    val driver = NnDescent.beamTopK(graph, vecs, probes, hops = 8,
+    val bulk = NnDescent.beamTopKBulk(graph, vecs, probes, hops = 8,
       beam = 4, k = 8, entries = entries).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
-    assert(hotRows === driver)
+    assert(hotRows === bulk)
   }
 
   test("hotArtifacts fails fast on a stale corpus (ADVICE r15): an " +
@@ -341,31 +336,6 @@ class NnDescentSpec extends GraftSuite {
     // (the decay axis the replication sweep measured)
     assert(rows(NnDescent.refreshEntries(grown, entryCand = 32)) !==
       rows(NnDescent.entryCandidates(vecs, entryCand = 32)))
-  }
-
-  test("beamServe takes the caller's batch-size hint (ADVICE r15: no " +
-      "per-call probes.count() dispatch job) and the hint changes " +
-      "only the engine, never the rows") {
-    val vecs = clustered(20)
-    val graph = NnDescent.knnGraph(vecs, k = 8, cap = 16, rounds = 2)
-      .select($"u", $"nb")
-    val entries = NnDescent.entryCandidates(vecs, entryCand = 32)
-    val probes = vecs.filter($"id".isin(5L, 105L))
-      .select($"id".as("query_id"), $"v".as("qv"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
-    val base = rows(NnDescent.beamServe(graph, vecs, probes, hops = 8,
-      beam = 4, k = 8, entries = entries))
-    // hint routes to the driver engine (2 <= the 2048 default)
-    val hinted = rows(NnDescent.beamServe(graph, vecs, probes,
-      hops = 8, beam = 4, k = 8, entries = entries,
-      knownBatch = Some(2L)))
-    // a hint past the threshold routes to bulk — same rows by parity
-    val hintedBulk = rows(NnDescent.beamServe(graph, vecs, probes,
-      hops = 8, beam = 4, k = 8, entries = entries,
-      knownBatch = Some(5000L)))
-    assert(hinted === base && hintedBulk === base)
   }
 
   test("hot-budget memory parsing (r16 self-review): a unit-less " +
