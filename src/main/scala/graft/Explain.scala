@@ -6,7 +6,7 @@ package graft
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = Main.session()
+    val spark = GraftSession("graft")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.01")
     if (args.headOption.contains("--audit")) { audit(spark, sfDir); return }

@@ -1,17 +1,31 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
+import graft.Cli.{Args, Verb}
 import graft.config.GraftConfig
 import graft.engine.{ClusterEngine, EngineConf, ResultDocs}
 import graft.io.{KStore, Sinks, Sources}
+import graft.operators.{Decontaminate, Dedup, GraphAnnIndex, IvfIndex,
+  PqIndex, Sketches}
+import graft.operators.BroadcastRelease.writeCounted
 
-/** CLI entry points mirroring the reference's two scripts
-  * (`/root/reference/scripts/cluster.py:238-308`,
+/** The command line: one table of verbs, two of them mirroring the
+  * reference's scripts (ykursadkaya/Clustering `scripts/cluster.py:238-308`,
   * `scripts/optimal_k.py:351-393`):
   *
-  *   graft.Main cluster   <interval> <inputCsvOrParquetDir> <outDir> [conf.json]
-  *   graft.Main optimal-k <inputCsvOrParquetDir> <outDir> [conf.json]
+  *   graft.Main cluster   <interval> <input> <outDir> [conf.json]
+  *   graft.Main optimal-k <input> <outDir> [conf.json]
+  *
+  * Each verb is declared once, as a usage signature ([[Cli]]) plus a
+  * body. `main` parses argv against the table before any session
+  * exists, so a bad argv prints the usage and exits 2 having started
+  * and written nothing. Otherwise it creates the one session, runs the
+  * body, prints `>>> [verb] k=v ...` from the fields the body returns,
+  * and stops the session. Counts of a verb's own batch output come from
+  * the writing job ([[graft.operators.BroadcastRelease.writeCounted]]),
+  * not from reading the output back.
   *
   * `cluster` runs the config task grid over the input, writes
   * originalCollection/d3Collection-shaped JSON docs per task, and consults
@@ -23,239 +37,687 @@ import graft.io.{KStore, Sinks, Sources}
   */
 object Main {
 
-  def main(args: Array[String]): Unit = args.toList match {
-    case "cluster" :: interval :: input :: outDir :: rest =>
-      run(loadConf(rest), interval, input, outDir, searchK = false)
-    case "optimal-k" :: input :: outDir :: rest =>
-      run(loadConf(rest), "optimal-k", input, outDir, searchK = true)
-    case "dedup" :: input :: outDir :: rest =>
-      runDedup(loadConf(rest), input, outDir)
-    case "dedup-ingest" :: batch :: indexDir :: outDir :: rest =>
-      runDedupIngest(loadConf(rest), batch, indexDir, outDir)
-    case "dedup-spans" :: input :: outDir :: rest =>
-      runDedupSpans(input, outDir,
-        rest.headOption.map(_.toInt).getOrElse(12))
-    case "exhibit" :: sfDir :: outDir :: _ =>
-      runExhibits(sfDir, outDir)
-    case "score" :: input :: outDir :: _ =>
-      runScore(input, outDir)
-    case "media-meta" :: input :: outDir :: _ =>
-      runMediaMeta(input, outDir)
-    case "kmeans-corpus" :: input :: outDir :: rest =>
-      runKmeansCorpus(input, outDir,
-        k = rest.headOption.map(_.toInt).getOrElse(0),
-        iterations = rest.drop(1).headOption.map(_.toInt).getOrElse(5))
-    case "report" :: input :: outPath :: _ =>
-      runReport(input, outPath)
-    case "graph" :: edges :: outDir :: rest =>
-      runGraph(edges, outDir,
-        rest.headOption.map(_.toInt).getOrElse(10))
-    case "screen" :: input :: outDir :: rest =>
-      runScreen(input, outDir, rest.headOption)
-    case "bpe-train" :: input :: mergesDir :: rest =>
-      runBpeTrain(input, mergesDir,
-        rest.headOption.map(_.toInt).getOrElse(32))
-    case "bpe-encode" :: input :: mergesDir :: outDir :: _ =>
-      runBpeEncode(input, mergesDir, outDir)
-    case "pca-train" :: input :: momentsDir :: _ =>
-      runPcaTrain(input, momentsDir)
-    case "pca-ingest" :: batch :: momentsDir :: _ =>
-      runPcaIngest(batch, momentsDir)
-    case "pca-project" :: input :: momentsDir :: outDir :: rest =>
-      runPcaProject(input, momentsDir, outDir,
-        rest.headOption.map(_.toInt).getOrElse(16))
-    case "ann-index" :: input :: outDir :: rest =>
-      runAnnIndex(loadConf(rest), input, outDir)
-    case "ann-ingest" :: batch :: indexDir :: rest =>
-      runAnnIngest(loadConf(rest), batch, indexDir)
-    case "ann-query" :: indexDir :: queries :: outDir :: rest =>
-      runAnnQuery(loadConf(rest), indexDir, queries, outDir)
-    case "ann-query-pq" :: indexDir :: queries :: outDir :: rest =>
-      runAnnQueryPq(loadConf(rest), indexDir, queries, outDir)
-    case "ann-query-ivfpq" :: indexDir :: queries :: outDir :: rest =>
-      runAnnQueryIvfPq(loadConf(rest), indexDir, queries, outDir)
-    case "graph-ann-build" :: input :: indexDir :: rest =>
-      runGraphAnnBuild(input, indexDir, rest)
-    case "graph-ann-ingest" :: batch :: indexDir :: rest =>
-      runGraphAnnIngest(batch, indexDir, rest)
-    case "graph-ann-serve" :: indexDir :: queries :: outDir :: rest =>
-      runGraphAnnServe(indexDir, queries, outDir, rest)
-    case "graph-ann-stream" :: srcDir :: indexDir :: chkDir :: rest =>
-      runGraphAnnStream(srcDir, indexDir, chkDir, rest)
-    case "sketch-ingest" :: batch :: sketchDir :: rest =>
-      runSketchIngest(batch, sketchDir,
-        rest.headOption.map(_.toLong).getOrElse(1L))
-    case "sketch-report" :: sketchDir :: outDir :: _ =>
-      runSketchReport(sketchDir, outDir)
-    case "snapshot-diff" :: oldPath :: newPath :: outDir :: _ =>
-      runSnapshotDiff(oldPath, newPath, outDir)
-    case "quality-filter" :: input :: outDir :: rest =>
-      runQualityFilter(input, outDir,
-        rest.headOption.map(_.toDouble).getOrElse(0.5))
-    case "dsir-select" :: input :: outDir :: rest =>
-      runDsirSelect(input, outDir,
-        rest.headOption.map(_.toInt).getOrElse(100))
-    case "compact" :: dir :: rest =>
-      runCompact(dir,
-        rest.headOption.map(_.toLong).getOrElse(128L) * 1024 * 1024)
-    case "jsonl-ingest" :: input :: outDir :: _ =>
-      runJsonlIngest(input, outDir)
-    case "decontaminate" :: input :: evalSet :: outDir :: rest =>
-      runDecontaminate(input, evalSet, outDir,
-        rest.headOption.map(_.toInt).getOrElse(8))
-    case "decon-index" :: evalSet :: indexDir :: rest =>
-      runDeconIndex(evalSet, indexDir,
-        rest.headOption.map(_.toInt).getOrElse(8))
-    case "decon-stream" :: srcDir :: indexDir :: outDir :: chkDir :: _ =>
-      runDeconStream(srcDir, indexDir, outDir, chkDir)
-    case "neardup-index" :: input :: indexDir :: _ =>
-      runNearDupIndex(input, indexDir)
-    case "neardup-stream" :: srcDir :: indexDir :: outDir :: chkDir :: rest =>
-      runNearDupStream(srcDir, indexDir, outDir, chkDir,
-        rest.headOption.map(_.toDouble).getOrElse(0.5))
-    case "moments-stream" :: srcDir :: momentsDir :: chkDir :: rest =>
-      runMomentsStream(srcDir, momentsDir, chkDir,
-        rest.headOption.map(_.toInt).getOrElse(64))
-    case "hll-stream" :: srcDir :: hllDir :: chkDir :: keyCol :: _ =>
-      runHllStream(srcDir, hllDir, chkDir, keyCol)
-    case "hist-stream" :: srcDir :: histDir :: chkDir :: valueCol :: rest =>
-      runHistStream(srcDir, histDir, chkDir, valueCol,
-        rest.headOption.map(_.toLong).getOrElse(16L),
-        rest.drop(1).headOption.map(_.toInt).getOrElse(64))
-    case "overlap" :: aPath :: bPath :: keyCol :: outDir :: _ =>
-      runOverlap(aPath, bPath, keyCol, outDir)
-    case "quantize" :: input :: outDir :: _ =>
-      runQuantize(input, outDir)
-    case "hybrid-search" :: docs :: emb :: outDir :: rest =>
-      runHybridSearch(docs, emb, outDir, rest)
-    case "curate" :: "--append" :: input :: outDir :: rest =>
-      runCurate(input, outDir,
-        rest.headOption.map(_.toLong).getOrElse(2000L), append = true)
-    case "curate" :: input :: outDir :: rest =>
-      runCurate(input, outDir,
-        rest.headOption.map(_.toLong).getOrElse(2000L))
-    case other =>
-      System.err.println(
-        s"""usage: graft.Main cluster <interval> <input> <outDir> [conf.json]
-           |       graft.Main optimal-k <input> <outDir> [conf.json]
-           |       graft.Main dedup <docsParquet> <outDir> [conf.json]
-           |       graft.Main dedup-ingest <batchParquet> <indexDir> <outDir> [conf.json]
-           |       graft.Main dedup-spans <docsParquet> <outDir> [w]
-           |       graft.Main score <docsParquet> <outDir>
-           |       graft.Main report <docsParquet> <outJson>
-           |       graft.Main bpe-train <docsParquet> <mergesDir> [k]
-           |       graft.Main bpe-encode <docsParquet> <mergesDir> <outDir>
-           |       graft.Main pca-train <embParquet> <momentsDir>
-           |       graft.Main pca-ingest <batchParquet> <momentsDir>
-           |       graft.Main pca-project <embParquet> <momentsDir> <outDir> [k]
-           |       graft.Main ann-index <embeddingsParquet> <outDir> [conf.json]
-           |       graft.Main ann-ingest <batchParquet> <indexDir> [conf.json]
-           |       graft.Main ann-query <indexDir> <queriesParquet> <outDir> [conf.json]
-           |       graft.Main ann-query-pq <indexDir> <queriesParquet> <outDir> [conf.json]
-           |       graft.Main ann-query-ivfpq <indexDir> <queriesParquet> <outDir> [conf.json]
-           |       graft.Main graph-ann-build <embeddingsParquet> <indexDir> [--k n] [--cap n] [--rounds n] [--entries n]
-           |       graft.Main graph-ann-ingest <batchParquet> <indexDir> [--refresh-entries] [--beam n] [--hops n]
-           |       graft.Main graph-ann-serve <indexDir> <queriesParquet> <outDir> [--beam n] [--hops n] [--topk n]
-           |       graft.Main graph-ann-stream <srcDir> <indexDir> <chkDir> [--refresh-entries]
-           |       graft.Main sketch-ingest <batchParquet> <sketchDir> [batchId]
-           |       graft.Main sketch-report <sketchDir> <outDir>
-           |       graft.Main snapshot-diff <oldParquet> <newParquet> <outDir>
-           |       graft.Main quality-filter <docsParquet> <outDir> [threshold]
-           |       graft.Main dsir-select <docsParquet> <outDir> [k]
-           |       graft.Main jsonl-ingest <jsonlPath> <outDir>  (clean parquet + quarantine)
-           |       graft.Main decontaminate <docsParquet> <evalParquet> <outDir> [w]
-           |       graft.Main decon-index <evalParquet> <indexDir> [w]
-           |       graft.Main decon-stream <srcDir> <indexDir> <outDir> <chkDir>
-           |       graft.Main neardup-index <docsParquet> <indexDir>
-           |       graft.Main neardup-stream <srcDir> <indexDir> <outDir> <chkDir> [threshold]
-           |       graft.Main moments-stream <srcDir> <momentsDir> <chkDir> [dim]
-           |       graft.Main hll-stream <srcDir> <hllDir> <chkDir> <keyCol>
-           |       graft.Main hist-stream <srcDir> <histDir> <chkDir> <valueCol> [width] [nbins]
-           |       graft.Main overlap <aParquet> <bParquet> <keyCol> <outDir>
-           |       graft.Main quantize <embParquet> <outDir>
-           |       graft.Main hybrid-search <docsParquet> <embParquet> <outDir> <term term ...> [--vec <id>] [--k <n>] [--rerank]
-           |       graft.Main curate [--append] <docsParquet> <outDir> [rowsPerShard]
-           |       graft.Main compact <parquetDir> [targetMB]  (writers must be quiesced)
-           |       graft.Main media-meta <binaryParquet> <outDir>
-           |       graft.Main kmeans-corpus <embParquet> <outDir> [k] [iters]  (k=0 sweeps 2..8)
-           |(got: ${other.mkString(" ")})""".stripMargin)
-      sys.exit(2)
+  def main(args: Array[String]): Unit = {
+    val code = run(args.toSeq) { body =>
+      val spark = GraftSession("graft")
+      try body(spark) finally spark.stop()
+    }
+    if (code != 0) sys.exit(code)
   }
 
-  /** Build the persisted similarity indexes from the config overlay's
-    * ANN knobs (annNlist, pqSubspaces, pqCentroids): a cosine IVF for
-    * `ann-query`, an L2 IVF for the `ann-query-ivfpq` composition (the
-    * coarse metric must match ADC's), and the PQ codebook + codes. */
-  private def runAnnIndex(gc: GraftConfig, input: String,
-      outDir: String): Unit = {
-    val spark = session()
-    val emb = spark.read.parquet(input)
-    graft.operators.IvfIndex.writeIndex(emb, "vec_id", "embedding",
-      s"$outDir/ivf", nlist = gc.annNlist, seed = 42L)
-    graft.operators.IvfIndex.writeIndex(emb, "vec_id", "embedding",
-      s"$outDir/ivf_l2", nlist = gc.annNlist, seed = 42L, metric = "l2")
-    graft.operators.PqIndex.writeIndex(emb, "vec_id", "embedding",
-      s"$outDir/pq", m = gc.pqSubspaces, k = gc.pqCentroids, seed = 42L)
-    spark.stop()
-  }
+  /** Parse `argv` against the verb table. A bad argv prints the reason
+    * and the usage to stderr and returns 2 without calling `inSession`;
+    * otherwise the verb's body runs inside `inSession`, its `>>>` line
+    * is printed, and the result is 0. */
+  private[graft] def run(argv: Seq[String])(
+      inSession: (SparkSession => Unit) => Unit): Int =
+    Cli.parse(verbs, argv) match {
+      case Left(why) =>
+        Console.err.println(s"$why\n${Cli.usage(verbs)}")
+        2
+      case Right((verb, a)) =>
+        inSession { spark =>
+          val fields = verb.body(spark, a)
+          println(s">>> [${verb.name}] " +
+            fields.map { case (k, v) => s"$k=$v" }.mkString(" "))
+        }
+        0
+    }
 
-  /** Ingest a new embedding batch into EVERY persisted index built by
-    * `ann-index`: both IVF variants (bucket-assign under the stored
-    * centroids) and the PQ codes (encode under the stored codebook) —
-    * no retraining, no corpus re-read. */
-  private def runAnnIngest(gc: GraftConfig, batch: String,
-      indexDir: String): Unit = {
-    val spark = session()
-    // guard each sub-index like VecIngest: a partial layout (only ivf/)
-    // must not throw after the first append already committed, and a
-    // fully absent layout must fail fast instead of silently no-opping
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    def has(sub: String): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/$sub"))
-    require(has("ivf") || has("ivf_l2") || has("pq"),
-      s"no index found under $indexDir — run ann-index first")
-    val emb = spark.read.parquet(batch)
-    if (has("ivf"))
-      graft.operators.IvfIndex.appendVectors(spark, s"$indexDir/ivf",
-        emb, "vec_id", "embedding")
-    if (has("ivf_l2"))
-      graft.operators.IvfIndex.appendVectors(spark, s"$indexDir/ivf_l2",
-        emb, "vec_id", "embedding")
-    if (has("pq"))
-      graft.operators.PqIndex.appendVectors(spark, s"$indexDir/pq",
-        emb, "vec_id", "embedding")
-    spark.stop()
-  }
+  private def conf(a: Args): GraftConfig =
+    a.get("conf.json").map(GraftConfig.fromFile).getOrElse(GraftConfig())
 
-  /** Answer top-k queries from the PERSISTED IVF index (annNprobe from
-    * the overlay) — no retraining, no corpus scan; only the probed
-    * bucket partitions are read. */
-  private def runAnnQuery(gc: GraftConfig, indexDir: String,
-      queries: String, outDir: String): Unit = {
-    val spark = session()
-    require(graft.operators.IvfIndex.readIndexMetric(spark,
-      s"$indexDir/ivf") == "cosine", "ann-query serves the cosine index")
-    val (centroids, buckets) =
-      graft.operators.IvfIndex.readIndex(spark, s"$indexDir/ivf")
-    val q = spark.read.parquet(queries)
-      .select(org.apache.spark.sql.functions.col("vec_id")
-          .as("query_id"),
-        org.apache.spark.sql.functions.col("embedding").as("qv"))
-    Sinks.writeParquet(
-      graft.operators.IvfIndex.topKAgainstIndex(q, centroids, buckets,
-        "query_id", "qv", k = 10, nprobe = gc.annNprobe)
-        .drop("qv"),
-      outDir)
-    spark.stop()
-  }
+  private[graft] val verbs: Seq[Verb] = Seq(
+    Verb("cluster <interval> <input> <outDir> [conf.json]") { (spark, a) =>
+      clusterGrid(spark, conf(a), a("interval"), a("input"), a("outDir"),
+        searchK = false)
+    },
+    Verb("optimal-k <input> <outDir> [conf.json]") { (spark, a) =>
+      clusterGrid(spark, conf(a), "optimal-k", a("input"), a("outDir"),
+        searchK = true)
+    },
+
+    /** North-star CLI: MinHash near-dup detection + duplicate families +
+      * the surviving corpus, parameterized by the config overlay's dedup
+      * knobs (minhashNumHashes/minhashBands/dedupThreshold/shingleN/
+      * maxBucket). Writes `pairs`, `families`, `kept` under outDir. */
+    Verb("dedup <docsParquet> <outDir> [conf.json]") { (spark, a) =>
+      val gc = conf(a)
+      val out = a("outDir")
+      val docs = spark.read.parquet(a("docsParquet"))
+      val pairs = Dedup.minhashNearDups(docs, "doc_id",
+        "text", numHashes = gc.minhashNumHashes, bands = gc.minhashBands,
+        threshold = gc.dedupThreshold, shingleN = gc.shingleN,
+        maxBucket = gc.maxBucket).persist()
+      val fields = Seq(
+        "pairs" -> writeCounted(pairs, s"$out/pairs"),
+        "families" -> writeCounted(Dedup.connectedComponents(pairs)
+          .groupBy(col("component"))
+          .agg(count(lit(1)).as("family_size")), s"$out/families"),
+        "kept" -> writeCounted(Dedup.keepCanonical(docs, "doc_id", pairs),
+          s"$out/kept"))
+      pairs.unpersist()
+      fields
+    },
+
+    /** Production ingest loop: dedup one batch against the growing
+      * persisted MinHash index (and itself), keep survivors, append only
+      * their signatures — batch-1 text is never re-read when batch 2
+      * arrives. Knobs from the config overlay, like `dedup`. */
+    Verb("dedup-ingest <batchParquet> <indexDir> <outDir> [conf.json]") {
+      (spark, a) =>
+        val gc = conf(a)
+        val (cross, inBatch, kept) = Dedup.ingest(spark,
+          spark.read.parquet(a("batchParquet")), a("indexDir"), a("outDir"),
+          numHashes = gc.minhashNumHashes, bands = gc.minhashBands,
+          threshold = gc.dedupThreshold, shingleN = gc.shingleN,
+          maxBucket = gc.maxBucket)
+        Seq("cross" -> cross, "in_batch" -> inBatch, "kept" -> kept)
+    },
+
+    /** Span-level dedup end-to-end: identify duplicated w-token spans
+      * ([[graft.operators.Dedup.duplicateSpans]]) and write both the span
+      * table and the excised corpus — the decontamination run of a
+      * training-data pipeline. */
+    Verb("dedup-spans <docsParquet> <outDir> [w:int=12]") { (spark, a) =>
+      val out = a("outDir")
+      val docs = spark.read.parquet(a("docsParquet"))
+      val spans = writeCounted(Dedup.duplicateSpans(docs,
+        "doc_id", "text", a.int("w")), s"$out/spans")
+      // excise from the span table just WRITTEN — identification runs
+      // exactly once, and the report reads files, not the DAG
+      Sinks.writeParquet(Dedup.exciseSpans(docs, "doc_id",
+        "text", spark.read.parquet(s"$out/spans")), s"$out/clean")
+      val removed = spark.read.parquet(s"$out/clean")
+        .agg(sum(col("n_removed"))).head().getLong(0)
+      Seq("w" -> a.int("w"), "spans" -> spans, "tokens_removed" -> removed)
+    },
+
+    /** Architecture-contrast exhibits (q31/q32 spark.ml backends):
+      * runnable on demand, out of the timed registry (their by-design
+      * spark.ml per-job overhead measured nothing new at 11 s per
+      * capture). Writes one parquet dir per exhibit. */
+    Verb("exhibit <sfDir> <outDir>") { (spark, a) =>
+      Registry.exhibits.map { q =>
+        val t0 = System.nanoTime()
+        q.run(spark, a("sfDir"))
+          .write.mode("overwrite").parquet(s"${a("outDir")}/${q.name}")
+        q.name -> f"${(System.nanoTime() - t0) / 1e9}%.1fs"
+      }
+    },
+
+    /** Corpus quality scoring in one pass: per document, the text-quality
+      * signals a pretraining filter consumes — token stats, heuristic
+      * language ID, composite quality score, repetition signals, and the
+      * mean unigram log-probability (the perplexity-style signal, trained
+      * on the corpus itself). Pure expressions plus the LM's one counts
+      * shuffle + scoring join. */
+    Verb("score <docsParquet> <outDir>") { (spark, a) =>
+      val docs = spark.read.parquet(a("docsParquet"))
+      val tf = graft.functions.TextFunctions
+      val signals = docs.select(
+        col("doc_id"),
+        tf.tokenCount(col("text")).as("n_tokens"),
+        tf.langId(col("text")).as("lang_id"),
+        round(tf.qualityScore(col("text")), 6).as("quality"),
+        round(tf.dupBigramFrac(col("text")), 6).as("dup_bigram_frac"))
+      val lm = tf.unigramLogProb(docs, "doc_id", "text")
+        .select(col("doc_id"), round(col("avg_logprob"), 6).as("avg_logprob"))
+      Seq("docs" -> writeCounted(signals.join(lm, Seq("doc_id"), "left_outer"),
+        a("outDir")))
+    },
+
+    /** Container-metadata extraction over a binary corpus
+      * ([[graft.multimodal.Multimodal.videoMeta]]): one map-side pass
+      * writes (id, format, brand, duration_ms, width, height, codec) —
+      * the honest metadata face of the codec-less MP4/WebM policy. */
+    Verb("media-meta <binaryParquet> <outDir>") { (spark, a) =>
+      Seq("rows" -> writeCounted(graft.multimodal.Multimodal.videoMeta(
+        spark.read.parquet(a("binaryParquet"))), a("outDir")))
+    },
+
+    /** Whole-corpus k-means ([[graft.ml.DistributedKMeans]]): with an
+      * explicit k, one deterministic k-means||-seeded fit — assignments
+      * to `outDir/assignments`, centroids to `outDir/centroids`. With
+      * k=0, the optimal-k SWEEP (2..8) runs first on a deterministic 10%
+      * hash slice, the winner by simplified silhouette is fit on the
+      * full corpus, and the decision surface lands in `outDir/sweep` —
+      * the reference's k-search lifecycle at corpus scale, never
+      * collecting the data. */
+    Verb("kmeans-corpus <embParquet> <outDir> [k:int=0] [iters:int=5]") {
+      (spark, a) =>
+        import spark.implicits._
+        val out = a("outDir")
+        val iterations = a.int("iters")
+        val vecs = spark.read.parquet(a("embParquet"))
+          .select(col("vec_id").cast("long").as("id"),
+            graft.operators.Similarity.asDouble(col("embedding")).as("v"))
+        val sweep =
+          if (a.int("k") > 0) Nil
+          else {
+            val slice = vecs.filter(
+              pmod(xxhash64(col("id"), lit(159L)), lit(10)) === 0)
+            val sw = graft.ml.DistributedKMeans
+              .sweepK(slice, "id", "v", ks = (2 to 8), iterations = iterations)
+            sw.toDF("k", "wssse", "silhouette")
+              .coalesce(1).write.mode("overwrite").json(s"$out/sweep")
+            sw
+          }
+        val chosenK =
+          if (sweep.isEmpty) a.int("k")
+          else sweep.maxBy(s => (s._3, -s._1))._1
+        val (asg, cents) = graft.ml.DistributedKMeans.fit(
+          vecs, "id", "v", chosenK, iterations)
+        val assigned = writeCounted(asg, s"$out/assignments")
+        Sinks.writeParquet(cents.select(col("c"), col("cv")),
+          s"$out/centroids")
+        sweep.map { case (kk, _, s) => s"sil$kk" -> f"$s%.4f" } ++
+          Seq("k" -> chosenK, "assigned" -> assigned)
+    },
+
+    /** Dataset-card JSON for a document corpus
+      * ([[graft.operators.CorpusReport]]) — three linear scans, one small
+      * deterministic file. */
+    Verb("report <docsParquet> <outJson>") { (spark, a) =>
+      val json = graft.operators.CorpusReport.report(
+        spark.read.parquet(a("docsParquet")))
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(a("outJson")), json + "\n")
+      Seq("card" -> json)
+    },
+
+    /** Graph analytics bundle over an edge parquet (first two columns =
+      * the endpoints): PageRank centrality, label-propagation
+      * communities, and per-node triangle counts, each a parquet
+      * artifact. One verb because the three share the edge scan and
+      * answer the same corpus question from three sides (who's central /
+      * who clusters / how cliquish). */
+    Verb("graph <edgesParquet> <outDir> [iters:int=10]") { (spark, a) =>
+      val out = a("outDir")
+      val edges = spark.read.parquet(a("edgesParquet"))
+      val Array(x, y) = edges.columns.take(2)
+      val g = graft.operators.Graph
+      val ranks = g.pageRankUndirected(edges, x, y, a.int("iters"))
+      val nodes = writeCounted(ranks, s"$out/ranks")
+      val comms = g.labelPropagation(edges, x, y)
+      Sinks.writeParquet(comms, s"$out/communities")
+      val tri = g.triangleCounts(edges, x, y)
+      Sinks.writeParquet(tri, s"$out/triangles")
+      val fields = Seq("nodes" -> nodes,
+        "communities" -> comms.select("lab").distinct().count(),
+        "triangles" -> tri.agg(sum(col("n_tri"))).head().getLong(0) / 3)
+      ranks.unpersist(); comms.unpersist(); tri.unpersist()
+      fields
+    },
+
+    /** Content screening bundle: compression-ratio repetition gate plus
+      * (optionally) an Aho–Corasick blocklist screen from a
+      * phrase-per-line file. Writes one profile parquet — (doc_id,
+      * n_bytes, ratio, hits, n_hits, keep) — with keep = in the
+      * compression band AND zero blocklist hits; the caller filters,
+      * the artifact keeps the evidence for every decision. */
+    Verb("screen <docsParquet> <outDir> [phrasesFile]") { (spark, a) =>
+      val docs = spark.read.parquet(a("docsParquet"))
+      val comp = graft.operators.Compression.profile(docs, "doc_id", "text")
+      val out = a.get("phrasesFile") match {
+        case Some(f) =>
+          val phrases = graft.operators.PhraseScreen.loadPhrases(f)
+          val hits = graft.operators.PhraseScreen.screen(
+            docs, "doc_id", "text", phrases)
+          comp.join(hits, Seq("doc_id"))
+            .withColumn("keep", col("keep") && col("n_hits") === 0)
+        case None =>
+          comp.withColumn("hits", array().cast("array<string>"))
+            .withColumn("n_hits", lit(0L))
+      }
+      val total = writeCounted(out, a("outDir"))
+      Seq("kept" -> spark.read.parquet(a("outDir")).filter(col("keep"))
+        .count(), "of" -> total)
+    },
+
+    /** BPE artifact lifecycle — tokenizer twin of the ANN/PCA stories:
+      * `bpe-train` runs the distributed word count + driver merge loop and
+      * persists the rank-ordered merge table; `bpe-encode` reads it back
+      * (never retrains) and tokenizes a corpus under the stored merges. */
+    Verb("bpe-train <docsParquet> <mergesDir> [k:int=32]") { (spark, a) =>
+      val merges = graft.operators.Bpe.topMerges(
+        spark.read.parquet(a("docsParquet")), "text", a.int("k"))
+      Seq("merges" -> writeCounted(merges.coalesce(1), a("mergesDir")))
+    },
+    Verb("bpe-encode <docsParquet> <mergesDir> <outDir>") { (spark, a) =>
+      val merges = spark.read.parquet(a("mergesDir"))
+        .orderBy(col("rank")).collect()
+        .map(r => (r.getAs[String]("left"), r.getAs[String]("right")))
+        .toSeq
+      require(merges.nonEmpty,
+        s"no merges at ${a("mergesDir")} — run bpe-train")
+      val out = graft.operators.Bpe
+        .encode(spark.read.parquet(a("docsParquet")), "text", merges)
+        .select(col("doc_id"), col("bpe_tokens"),
+          size(col("bpe_tokens")).as("n_bpe"))
+      Seq("docs" -> writeCounted(out, a("outDir")))
+    },
+
+    /** PCA moments lifecycle from the command line — the model twin of
+      * ann-index/ann-ingest: train starts the append-only moments
+      * artifact, ingest appends a batch's moments (no old data re-read),
+      * project fits from the artifact alone and writes pc columns. The
+      * embedding width is read from the data. */
+    Verb("pca-train <embParquet> <momentsDir>") { (spark, a) =>
+      val emb = spark.read.parquet(a("embParquet"))
+      val dim = embDim(emb)
+      graft.ml.Pca.writeMoments(emb, "embedding", dim, a("momentsDir"))
+      Seq("dim" -> dim, "rows" -> emb.count())
+    },
+    Verb("pca-ingest <batchParquet> <momentsDir>") { (spark, a) =>
+      val emb = spark.read.parquet(a("batchParquet"))
+      graft.ml.Pca.appendMoments(emb, "embedding", embDim(emb),
+        a("momentsDir"))
+      Seq("appended" -> emb.count())
+    },
+    Verb("pca-project <embParquet> <momentsDir> <outDir> [k:int=16]") {
+      (spark, a) =>
+        val model = graft.ml.Pca.fitFromMoments(spark, a("momentsDir"),
+          a.int("k"))
+        Sinks.writeParquet(model.transform(
+          spark.read.parquet(a("embParquet")), "embedding"), a("outDir"))
+        Seq("k" -> a.int("k"),
+          "explained" -> f"${model.explainedVariance.sum}%.4f")
+    },
+
+    /** Build the persisted similarity indexes from the config overlay's
+      * ANN knobs (annNlist, pqSubspaces, pqCentroids): a cosine IVF for
+      * `ann-query`, an L2 IVF for the `ann-query-ivfpq` composition (the
+      * coarse metric must match ADC's), and the PQ codebook + codes. */
+    Verb("ann-index <embeddingsParquet> <outDir> [conf.json]") {
+      (spark, a) =>
+        val gc = conf(a)
+        val out = a("outDir")
+        val emb = spark.read.parquet(a("embeddingsParquet"))
+        IvfIndex.writeIndex(emb, "vec_id", "embedding",
+          s"$out/ivf", nlist = gc.annNlist, seed = 42L)
+        IvfIndex.writeIndex(emb, "vec_id", "embedding",
+          s"$out/ivf_l2", nlist = gc.annNlist, seed = 42L, metric = "l2")
+        PqIndex.writeIndex(emb, "vec_id", "embedding",
+          s"$out/pq", m = gc.pqSubspaces, k = gc.pqCentroids, seed = 42L)
+        Seq("dir" -> out)
+    },
+
+    /** Ingest a new embedding batch into EVERY persisted index built by
+      * `ann-index`: both IVF variants (bucket-assign under the stored
+      * centroids) and the PQ codes (encode under the stored codebook) —
+      * no retraining, no corpus re-read. */
+    Verb("ann-ingest <batchParquet> <indexDir> [conf.json]") { (spark, a) =>
+      val indexDir = a("indexDir")
+      // guard each sub-index like VecIngest: a partial layout (only ivf/)
+      // must not throw after the first append already committed, and a
+      // fully absent layout must fail fast instead of silently no-opping
+      val present = Seq("ivf", "ivf_l2", "pq")
+        .filter(sub => Sources.exists(spark, s"$indexDir/$sub"))
+      require(present.nonEmpty,
+        s"no index found under $indexDir — run ann-index first")
+      val emb = spark.read.parquet(a("batchParquet"))
+      present.foreach {
+        case "pq" => PqIndex.appendVectors(spark, s"$indexDir/pq",
+          emb, "vec_id", "embedding")
+        case ivf => IvfIndex.appendVectors(spark, s"$indexDir/$ivf",
+          emb, "vec_id", "embedding")
+      }
+      Seq("appended" -> present.mkString(","))
+    },
+
+    /** Answer top-k queries from the PERSISTED IVF index (annNprobe from
+      * the overlay) — no retraining, no corpus scan; only the probed
+      * bucket partitions are read. */
+    Verb("ann-query <indexDir> <queriesParquet> <outDir> [conf.json]") {
+      (spark, a) =>
+        val ivf = s"${a("indexDir")}/ivf"
+        require(IvfIndex.readIndexMetric(spark, ivf) == "cosine",
+          "ann-query serves the cosine index")
+        val (centroids, buckets) = IvfIndex.readIndex(spark, ivf)
+        val q = spark.read.parquet(a("queriesParquet"))
+          .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+        Seq("results" -> writeCounted(
+          IvfIndex.topKAgainstIndex(q, centroids, buckets,
+            "query_id", "qv", k = 10, nprobe = conf(a).annNprobe)
+            .drop("qv"),
+          a("outDir")))
+    },
+
+    /** Answer top-k from the PERSISTED PQ index alone (codebook + codes —
+      * the 32×-compressed artifact; no float vector is read). */
+    Verb("ann-query-pq <indexDir> <queriesParquet> <outDir> [conf.json]") {
+      (spark, a) =>
+        val (cb, codes) = PqIndex.readIndex(spark, s"${a("indexDir")}/pq")
+        Seq("results" -> writeCounted(PqIndex.adcTopK(spark,
+          loadQueryVectors(spark, a("queriesParquet")), codes, cb, k = 10),
+          a("outDir")))
+    },
+
+    /** Answer top-k from the PERSISTED IVF-PQ composition: the L2 IVF
+      * prunes to annNprobe bucket partitions, the PQ codes score the
+      * survivors via ADC — the FAISS-style serving path, entirely from
+      * stored artifacts. */
+    Verb("ann-query-ivfpq <indexDir> <queriesParquet> <outDir> " +
+        "[conf.json]") { (spark, a) =>
+      val indexDir = a("indexDir")
+      require(IvfIndex.readIndexMetric(spark, s"$indexDir/ivf_l2") == "l2",
+        "ann-query-ivfpq needs the L2-bucketed index (coarse metric must " +
+          "match ADC)")
+      val (centroids, buckets) =
+        IvfIndex.readIndex(spark, s"$indexDir/ivf_l2")
+      val (cb, codes) = PqIndex.readIndex(spark, s"$indexDir/pq")
+      Seq("results" -> writeCounted(PqIndex.ivfPqTopKAgainstIndex(spark,
+        loadQueryVectors(spark, a("queriesParquet")), centroids, buckets,
+        cb, codes, nprobe = conf(a).annNprobe, topK = 10), a("outDir")))
+    },
+
+    /** Graph-ANN index lifecycle from the command line (the serving
+      * ladder as a user surface, mirroring the IVF trio):
+      * build persists graph/vectors/entries/adj/meta, ingest appends a
+      * batch without retraining (`--refresh-entries` re-derives the
+      * entry frame from the grown corpus), serve answers a query
+      * parquet on the hot RAM replica when its estimate fits the
+      * budget, else on the relational engine. All three compose
+      * the gated operators unchanged — GraphAnnCliSpec pins the CLI
+      * path hash-equal to the q243/q244 oracle faces. */
+    Verb("graph-ann-build <embeddingsParquet> <indexDir> [--k int=16] " +
+        "[--cap int=32] [--rounds int=3] [--entries int=32]") { (spark, a) =>
+      val (n, e) = GraphAnnIndex.build(spark, a("embeddingsParquet"),
+        a("indexDir"), k = a.int("--k"), cap = a.int("--cap"),
+        rounds = a.int("--rounds"), entryCand = a.int("--entries"))
+      Seq("vectors" -> n, "edges" -> e, "dir" -> a("indexDir"))
+    },
+    Verb("graph-ann-ingest <batchParquet> <indexDir> [--refresh-entries] " +
+        "[--beam int=4] [--hops int=4]") { (spark, a) =>
+      val (nNew, nRefreshed) = GraphAnnIndex.ingest(spark,
+        a("batchParquet"), a("indexDir"), beam = a.int("--beam"),
+        hops = a.int("--hops"), refreshEntries = a.has("--refresh-entries"))
+      Seq("appended" -> nNew, "refreshed_old_lists" -> nRefreshed) ++
+        (if (a.has("--refresh-entries")) Seq("entries" -> "refreshed")
+        else Nil)
+    },
+    Verb("graph-ann-serve <indexDir> <queriesParquet> <outDir> " +
+        "[--beam int=4] [--hops int=8] [--topk int=8]") { (spark, a) =>
+      val served = GraphAnnIndex.serve(spark, a("indexDir"),
+        a("queriesParquet"), a("outDir"), beam = a.int("--beam"),
+        hops = a.int("--hops"), k = a.int("--topk"))
+      Seq("engine" -> served.engine, "est" -> served.estBytes,
+        "budget" -> served.budget, "probes" -> served.probes,
+        "results" -> served.rows)
+    },
+
+    /** Streaming graph-ANN ingest: drain the embedding backlog in
+      * `srcDir` into the persisted index via the q240 append protocol,
+      * batch-replay idempotent ([[graft.streaming.GraphAnnStream]]). */
+    Verb("graph-ann-stream <srcDir> <indexDir> <chkDir> " +
+        "[--refresh-entries]") { (spark, a) =>
+      graft.streaming.GraphAnnStream.runToCompletion(spark, a("srcDir"),
+        a("indexDir"), a("chkDir"),
+        refreshEntries = a.has("--refresh-entries"))
+      Seq("indexed" -> graft.streaming.GraphAnnStream
+        .indexedVectors(spark, a("indexDir")).count())
+    },
+
+    /** Cardinality-sketch artifact lifecycle (`operators/Sketches.scala`):
+      * ingest appends one tiny per-(source)-group HLL row per batch —
+      * never reading old data — and report answers "distinct docs ever
+      * seen" from the artifact alone. */
+    Verb("sketch-ingest <batchParquet> <sketchDir> [batchId:long=1]") {
+      (spark, a) =>
+        Sketches.appendSketches(spark.read.parquet(a("batchParquet")),
+          "source", "doc_id", a("sketchDir"), a.long("batchId"))
+        Seq("batch" -> a.long("batchId"), "dir" -> a("sketchDir"))
+    },
+    Verb("sketch-report <sketchDir> <outDir>") { (spark, a) =>
+      Seq("groups" -> writeCounted(
+        Sketches.estimateFromArtifact(spark, a("sketchDir"))
+          .orderBy(col("group")), a("outDir")))
+    },
+
+    /** Content-keyed incremental diff: only `added` rows need dedup +
+      * scoring downstream; `removed` feeds retention bookkeeping. */
+    Verb("snapshot-diff <oldParquet> <newParquet> <outDir>") { (spark, a) =>
+      Sinks.writeParquet(Dedup.snapshotDiff(spark.read.parquet(
+        a("oldParquet")), spark.read.parquet(a("newParquet")), "text"),
+        a("outDir"))
+      spark.read.parquet(a("outDir"))
+        .groupBy("diff_status").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1).toSeq
+    },
+
+    /** fastText-style quality gate: train the hashed-bigram logistic
+      * classifier against the `en` slice as the quality target, score
+      * everything, keep rows at or above the threshold. */
+    Verb("quality-filter <docsParquet> <outDir> [threshold:double=0.5]") {
+      (spark, a) =>
+        val docs = spark.read.parquet(a("docsParquet"))
+        val model = graft.ml.QualityClassifier.train(docs, "doc_id", "text",
+          isTarget = col("lang") === "en", buckets = 1024, seed = 42L,
+          maxSample = 200, iters = 60)
+        val scored = docs.join(
+          graft.ml.QualityClassifier.score(docs, "doc_id", "text", model),
+          "doc_id")
+        Seq("kept" -> writeCounted(
+          scored.filter(col("quality_score") >= a.double("threshold")),
+          a("outDir")), "of" -> docs.count())
+    },
+
+    /** DSIR selection: importance-weight against the `en` target and keep
+      * the Gumbel-top-k docs (`operators/Dsir.scala`). */
+    Verb("dsir-select <docsParquet> <outDir> [k:int=100]") { (spark, a) =>
+      val docs = spark.read.parquet(a("docsParquet"))
+      val weights = graft.operators.Dsir.importanceWeights(docs, "doc_id",
+        "text", isTarget = col("lang") === "en", buckets = 1024, seed = 42L)
+      // target docs inform the model but only the RAW pool is selected
+      // from — otherwise the highest-weighted target docs fill the top-k
+      val raw = docs.filter(col("lang") =!= "en").select(col("doc_id"))
+      val picked = graft.operators.Dsir.resampleTopK(
+        weights.join(raw, "doc_id"), "doc_id", k = a.int("k"), seed = 7L)
+      Seq("kept" -> writeCounted(docs.join(picked, "doc_id"), a("outDir")))
+    },
+
+    /** Small-files compaction for an ingest-grown parquet directory —
+      * see [[graft.io.Sinks.compact]]. Writers must be quiesced. */
+    Verb("compact <parquetDir> [targetMB:long=128]") { (spark, a) =>
+      val (before, after) = Sinks.compact(spark, a("parquetDir"),
+        a.long("targetMB") * 1024 * 1024)
+      Seq("dir" -> a("parquetDir"), "files_before" -> before,
+        "files_after" -> after)
+    },
+
+    /** JSONL front door: PERMISSIVE read with corrupt-line quarantine
+      * ([[graft.io.Sources.readJsonl]]) → clean parquet + the quarantined
+      * raw lines as the audit artifact. */
+    Verb("jsonl-ingest <jsonlPath> <outDir>") { (spark, a) =>
+      val (clean, bad) =
+        Sources.splitQuarantine(Sources.readJsonl(spark, a("jsonlPath")))
+      Seq("clean" -> writeCounted(clean, s"${a("outDir")}/clean"),
+        "quarantined" -> writeCounted(bad, s"${a("outDir")}/quarantine"))
+    },
+
+    /** Benchmark decontamination: per-training-doc w-gram overlap report
+      * against the eval set, plus the CLEANED corpus (overlapping docs
+      * anti-joined away) — the artifact keeps the evidence, the clean
+      * set is what trains. */
+    Verb("decontaminate <docsParquet> <evalParquet> <outDir> [w:int=8]") {
+      (spark, a) =>
+        val out = a("outDir")
+        val train = spark.read.parquet(a("docsParquet"))
+        val report = Decontaminate.overlapReport(train,
+          spark.read.parquet(a("evalParquet")), "doc_id", "text", a.int("w"))
+        val contaminated = writeCounted(report, s"$out/report")
+        val clean = train.join(
+          spark.read.parquet(s"$out/report").select("doc_id"),
+          Seq("doc_id"), "left_anti")
+        Seq("contaminated" -> contaminated,
+          "kept" -> writeCounted(clean, s"$out/clean"), "of" -> train.count())
+    },
+
+    /** Build the persisted eval-gram decon index once; `decon-stream`
+      * then screens arriving shards without re-reading the eval set. */
+    Verb("decon-index <evalParquet> <indexDir> [w:int=8]") { (spark, a) =>
+      Seq("grams" -> Decontaminate.writeEvalIndex(
+        spark.read.parquet(a("evalParquet")), "doc_id", "text",
+        a("indexDir"), a.int("w")), "w" -> a.int("w"))
+    },
+
+    /** Streaming decontamination screen: drain the parquet backlog in
+      * `srcDir` against the persisted index, writing per-doc overlap
+      * evidence to batchId-keyed partition dirs (replay-idempotent; the
+      * q202 face). Re-running with the same checkpoint is a no-op. */
+    Verb("decon-stream <srcDir> <indexDir> <outDir> <chkDir>") {
+      (spark, a) =>
+        graft.streaming.DeconStream.runToCompletion(spark, a("srcDir"),
+          a("indexDir"), a("outDir"), a("chkDir"))
+        // an already-drained checkpoint (or all-empty source files) is a
+        // correct no-op that never creates outDir
+        Seq("flagged" -> (if (Sources.exists(spark, a("outDir")))
+          graft.streaming.DeconStream.readOutput(spark, a("outDir")).count()
+        else 0L))
+    },
+
+    /** Build the persisted REPLAYABLE near-dup index (md5 band keys +
+      * shingle sets) for `neardup-stream`. The xxhash64 production index
+      * stays behind `dedup-ingest`. */
+    Verb("neardup-index <docsParquet> <indexDir>") { (spark, a) =>
+      Seq("docs" -> Dedup.writeReplayableIndex(
+        spark.read.parquet(a("docsParquet")), "doc_id", "text",
+        a("indexDir")))
+    },
+
+    /** Streaming near-dup screen: drain the parquet backlog in `srcDir`
+      * against the persisted replayable index, writing verified
+      * (new_id, corpus_id, jaccard) matches to batchId-keyed partition
+      * dirs (replay-idempotent; the q203 face). */
+    Verb("neardup-stream <srcDir> <indexDir> <outDir> <chkDir> " +
+        "[threshold:double=0.5]") { (spark, a) =>
+      graft.streaming.NearDupStream.runToCompletion(spark, a("srcDir"),
+        a("indexDir"), a("outDir"), a("chkDir"),
+        threshold = a.double("threshold"))
+      // same no-op contract as decon-stream: nothing drained, no outDir
+      Seq("matches" -> (if (Sources.exists(spark, a("outDir")))
+        graft.streaming.NearDupStream.readOutput(spark, a("outDir")).count()
+      else 0L))
+    },
+
+    /** Streaming model growth: drain the embedding backlog in `srcDir`,
+      * upserting one idempotent moments row per micro-batch (the q207
+      * face); the artifact then serves [[graft.ml.Pca.fitFromMoments]]
+      * without ever re-reading data. */
+    Verb("moments-stream <srcDir> <momentsDir> <chkDir> [dim:int=64]") {
+      (spark, a) =>
+        graft.streaming.MomentsStream.runToCompletion(spark, a("srcDir"),
+          a("momentsDir"), a("chkDir"), dim = a.int("dim"))
+        Seq("batches" -> (if (Sources.exists(spark, a("momentsDir")))
+          spark.read.parquet(a("momentsDir")).count() else 0L))
+    },
+
+    /** Streaming distinct-count growth over the portable-HLL artifact
+      * ([[graft.streaming.HllStream]]): drain the backlog, then serve
+      * the estimate from the register-max merge of the artifact alone —
+      * the q211 lifecycle as an operational verb. */
+    Verb("hll-stream <srcDir> <hllDir> <chkDir> <keyCol>") { (spark, a) =>
+      val hllDir = a("hllDir")
+      graft.streaming.HllStream.runToCompletion(spark, a("srcDir"), hllDir,
+        a("chkDir"), a("keyCol"))
+      val est = Sketches.hllEstimate(
+        Sketches.hllRegistersFromArtifact(spark, hllDir))
+        .select("est").head().getDouble(0)
+      Seq("batches" -> spark.read.parquet(hllDir)
+        .select("batch_id").distinct().count(), "est" -> est)
+    },
+
+    /** Streaming quantile growth over the histogram artifact
+      * ([[graft.streaming.SketchStreams.runHistToCompletion]]): drain
+      * the backlog, then serve p50/p95/p99 from the per-bin sum of the
+      * artifact alone — the q222 lifecycle as an operational verb. */
+    Verb("hist-stream <srcDir> <histDir> <chkDir> <valueCol> " +
+        "[width:long=16] [nbins:int=64]") { (spark, a) =>
+      val histDir = a("histDir")
+      graft.streaming.SketchStreams.runHistToCompletion(spark, a("srcDir"),
+        histDir, a("chkDir"), a("valueCol"), a.long("width"), a.int("nbins"))
+      val qs = Sketches.histogramQuantiles(
+        Sketches.histogramCountsFromArtifact(spark, histDir),
+        a.long("width"), Seq(0.5, 0.95, 0.99))
+        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+      Seq("batches" -> spark.read.parquet(histDir)
+        .select("batch_id").distinct().count(),
+        "p50" -> qs(0.5), "p95" -> qs(0.95), "p99" -> qs(0.99))
+    },
+
+    /** Dataset-overlap estimate by HLL set algebra ([[graft.operators
+      * .Sketches]], the q214 mechanism): |A∩B| ≈ Â + B̂ - Û from p=12
+      * portable registers — the two inputs are sketched independently
+      * and never joined. Writes the one-row estimate to `outDir`. */
+    Verb("overlap <aParquet> <bParquet> <keyCol> <outDir>") { (spark, a) =>
+      val ra = Sketches.hllRegisters(spark.read.parquet(a("aParquet")),
+        a("keyCol"), p = 12)
+      val rb = Sketches.hllRegisters(spark.read.parquet(a("bParquet")),
+        a("keyCol"), p = 12)
+      val ru = Sketches.hllMergeRegisters(ra, rb)
+      def est(r: DataFrame, name: String) =
+        Sketches.hllEstimate(r, p = 12).select(col("est").as(name))
+      Sinks.writeParquet(est(ra, "est_a").crossJoin(est(rb, "est_b"))
+        .crossJoin(est(ru, "est_u"))
+        .withColumn("est_overlap",
+          round(col("est_a") + col("est_b") - col("est_u"), 4)), a("outDir"))
+      val row = spark.read.parquet(a("outDir")).head()
+      Seq("est_a", "est_b", "est_u", "est_overlap").zipWithIndex
+        .map { case (n, i) => n -> row.getDouble(i) }
+    },
+
+    /** Int8 scalar quantization audit: per-vector code checksum +
+      * reconstruction error ([[graft.operators.ScalarQuant]]). */
+    Verb("quantize <embParquet> <outDir>") { (spark, a) =>
+      val emb = spark.read.parquet(a("embParquet"))
+      Sinks.writeParquet(graft.operators.ScalarQuant.quantizeReport(
+        emb, "vec_id", "embedding"), a("outDir"))
+      Seq("vectors" -> emb.count(), "meanReconErr" ->
+        spark.read.parquet(a("outDir")).agg(round(avg("recon_err"), 6))
+          .head().getDouble(0))
+    },
+
+    /** Hybrid BM25 + cosine retrieval with RRF fusion
+      * ([[graft.operators.Retrieval.hybridTopK]]); `--rerank` re-scores
+      * the fused candidates pairwise from the stored embeddings (the
+      * q224 two-stage face). */
+    Verb("hybrid-search <docsParquet> <embParquet> <outDir> <term ...> " +
+        "[--vec long=0] [--k int=10] [--rerank]") { (spark, a) =>
+      val (docs, emb) = (spark.read.parquet(a("docsParquet")),
+        spark.read.parquet(a("embParquet")))
+      val out =
+        if (a.has("--rerank")) graft.operators.Retrieval.rerankTopK(docs,
+          emb, queryTerms = a.terms, queryVecId = a.long("--vec"),
+          k = a.int("--k"))
+        else graft.operators.Retrieval.hybridTopK(docs, emb,
+          queryTerms = a.terms, queryVecId = a.long("--vec"),
+          k = a.int("--k"))
+      Seq("results" -> writeCounted(out, a("outDir")))
+    },
+
+    /** The nightly corpus build in ONE verb — see
+      * [[graft.operators.Curation.curate]]; `--append` grows an existing
+      * directory with new-content docs only
+      * ([[graft.operators.Curation.curateAppend]]). */
+    Verb("curate [--append] <docsParquet> <outDir> " +
+        "[rowsPerShard:long=2000]") { (spark, a) =>
+      val docs = spark.read.parquet(a("docsParquet"))
+      val counts =
+        if (a.has("--append")) graft.operators.Curation.curateAppend(spark,
+          docs, a("outDir"), a.long("rowsPerShard"))
+        else graft.operators.Curation.curate(spark, docs, a("outDir"),
+          a.long("rowsPerShard"))
+      Seq("append" -> a.has("--append"), "in" -> docs.count(),
+        "kept" -> counts.values.sum) ++ counts.toSeq.sortBy(_._1)
+    }
+  )
 
   /** Collect the bounded query probe set as local (id, vector) pairs —
     * the shape the ADC scorers take their per-query lookup tables from.
     */
   private def loadQueryVectors(spark: SparkSession,
-      queries: String): Seq[(Long, Array[Double])] = {
-    import org.apache.spark.sql.functions.col
+      queries: String): Seq[(Long, Array[Double])] =
     spark.read.parquet(queries)
       .select(col("vec_id").cast("long"),
         graft.operators.Similarity.asDouble(col("embedding")))
@@ -263,646 +725,17 @@ object Main {
       .map(r => r.getLong(0) ->
         r.getAs[scala.collection.Seq[Double]](1).toArray)
       .toSeq.sortBy(_._1)
-  }
 
-  /** Answer top-k from the PERSISTED PQ index alone (codebook + codes —
-    * the 32×-compressed artifact; no float vector is read). */
-  private def runAnnQueryPq(gc: GraftConfig, indexDir: String,
-      queries: String, outDir: String): Unit = {
-    val spark = session()
-    val (cb, codes) =
-      graft.operators.PqIndex.readIndex(spark, s"$indexDir/pq")
-    Sinks.writeParquet(
-      graft.operators.PqIndex.adcTopK(spark,
-        loadQueryVectors(spark, queries), codes, cb, k = 10),
-      outDir)
-    spark.stop()
-  }
+  private def embDim(df: DataFrame): Int =
+    df.select(size(col("embedding"))).head().getInt(0)
 
-  /** Answer top-k from the PERSISTED IVF-PQ composition: the L2 IVF
-    * prunes to annNprobe bucket partitions, the PQ codes score the
-    * survivors via ADC — the FAISS-style serving path, entirely from
-    * stored artifacts. */
-  private def runAnnQueryIvfPq(gc: GraftConfig, indexDir: String,
-      queries: String, outDir: String): Unit = {
-    val spark = session()
-    require(graft.operators.IvfIndex.readIndexMetric(spark,
-      s"$indexDir/ivf_l2") == "l2",
-      "ann-query-ivfpq needs the L2-bucketed index (coarse metric must " +
-        "match ADC)")
-    val (centroids, buckets) =
-      graft.operators.IvfIndex.readIndex(spark, s"$indexDir/ivf_l2")
-    val (cb, codes) =
-      graft.operators.PqIndex.readIndex(spark, s"$indexDir/pq")
-    Sinks.writeParquet(
-      graft.operators.PqIndex.ivfPqTopKAgainstIndex(spark,
-        loadQueryVectors(spark, queries), centroids, buckets, cb, codes,
-        nprobe = gc.annNprobe, topK = 10),
-      outDir)
-    spark.stop()
-  }
-
-  /** Graph-ANN index lifecycle from the command line (VERDICT r15 #1
-    * — the serving ladder as a user surface, mirroring the IVF trio):
-    * build persists graph/vectors/entries/adj/meta, ingest appends a
-    * batch without retraining (`--refresh-entries` re-derives the
-    * entry frame from the grown corpus), serve answers a query
-    * parquet on the hot RAM replica when its estimate fits the
-    * budget, else on the relational engine. All three compose
-    * the gated operators unchanged — GraphAnnCliSpec pins the CLI
-    * path hash-equal to the q243/q244 oracle faces. */
-  private def flagOpt(rest: List[String], flag: String): Option[String] =
-    rest.sliding(2).collectFirst { case List(`flag`, v) => v }
-
-  private def runGraphAnnBuild(input: String, indexDir: String,
-      rest: List[String]): Unit = {
-    val spark = session()
-    val (n, e) = graft.operators.GraphAnnIndex.build(spark, input,
-      indexDir,
-      k = flagOpt(rest, "--k").map(_.toInt).getOrElse(16),
-      cap = flagOpt(rest, "--cap").map(_.toInt).getOrElse(32),
-      rounds = flagOpt(rest, "--rounds").map(_.toInt).getOrElse(3),
-      entryCand = flagOpt(rest, "--entries").map(_.toInt).getOrElse(32))
-    println(s">>> [graph-ann-build] vectors=$n edges=$e dir=$indexDir")
-    spark.stop()
-  }
-
-  private def runGraphAnnIngest(batch: String, indexDir: String,
-      rest: List[String]): Unit = {
-    val spark = session()
-    val (nNew, nRefreshed) = graft.operators.GraphAnnIndex.ingest(
-      spark, batch, indexDir,
-      beam = flagOpt(rest, "--beam").map(_.toInt).getOrElse(4),
-      hops = flagOpt(rest, "--hops").map(_.toInt).getOrElse(4),
-      refreshEntries = rest.contains("--refresh-entries"))
-    println(s">>> [graph-ann-ingest] appended=$nNew " +
-      s"refreshed_old_lists=$nRefreshed" +
-      (if (rest.contains("--refresh-entries")) " entries=refreshed"
-      else ""))
-    spark.stop()
-  }
-
-  private def runGraphAnnServe(indexDir: String, queries: String,
-      outDir: String, rest: List[String]): Unit = {
-    val spark = session()
-    val served = graft.operators.GraphAnnIndex.serve(spark,
-      indexDir, queries, outDir,
-      beam = flagOpt(rest, "--beam").map(_.toInt).getOrElse(4),
-      hops = flagOpt(rest, "--hops").map(_.toInt).getOrElse(8),
-      k = flagOpt(rest, "--topk").map(_.toInt).getOrElse(8))
-    println(s">>> [graph-ann-serve] engine=${served.engine} " +
-      s"est=${served.estBytes} budget=${served.budget} " +
-      s"probes=${served.probes} results=${served.rows}")
-    spark.stop()
-  }
-
-  /** Streaming graph-ANN ingest: drain the embedding backlog in
-    * `srcDir` into the persisted index via the q240 append protocol,
-    * batch-replay idempotent ([[graft.streaming.GraphAnnStream]]). */
-  private def runGraphAnnStream(srcDir: String, indexDir: String,
-      chkDir: String, rest: List[String]): Unit = {
-    val spark = session()
-    graft.streaming.GraphAnnStream.runToCompletion(spark, srcDir,
-      indexDir, chkDir,
-      refreshEntries = rest.contains("--refresh-entries"))
-    println(s">>> [graph-ann-stream] indexed=" +
-      s"${graft.streaming.GraphAnnStream.indexedVectors(spark, indexDir).count()}")
-    spark.stop()
-  }
-
-  /** North-star CLI: MinHash near-dup detection + duplicate families +
-    * the surviving corpus, parameterized by the config overlay's dedup
-    * knobs (minhashNumHashes/minhashBands/dedupThreshold/shingleN/
-    * maxBucket). Writes `pairs`, `families`, `kept` under outDir. */
-  private def runDedup(gc: GraftConfig, input: String,
-      outDir: String): Unit = {
-    val spark = session()
-    val docs = spark.read.parquet(input)
-    val pairs = graft.operators.Dedup.minhashNearDups(docs, "doc_id",
-      "text", numHashes = gc.minhashNumHashes, bands = gc.minhashBands,
-      threshold = gc.dedupThreshold, shingleN = gc.shingleN,
-      maxBucket = gc.maxBucket).persist()
-    Sinks.writeParquet(pairs, s"$outDir/pairs")
-    val families = graft.operators.Dedup.connectedComponents(pairs)
-      .groupBy(org.apache.spark.sql.functions.col("component"))
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("family_size"))
-    Sinks.writeParquet(families, s"$outDir/families")
-    Sinks.writeParquet(
-      graft.operators.Dedup.keepCanonical(docs, "doc_id", pairs),
-      s"$outDir/kept")
-    pairs.unpersist()
-    spark.stop()
-  }
-
-  /** Production ingest loop: dedup one batch against the growing
-    * persisted MinHash index (and itself), keep survivors, append only
-    * their signatures — batch-1 text is never re-read when batch 2
-    * arrives. Knobs from the config overlay, like `dedup`. */
-  /** Span-level dedup end-to-end: identify duplicated w-token spans
-    * ([[graft.operators.Dedup.duplicateSpans]]) and write both the span
-    * table and the excised corpus — the decontamination run of a
-    * training-data pipeline. */
-  private def runDedupSpans(input: String, outDir: String,
-      w: Int): Unit = {
-    val spark = session()
-    val docs = spark.read.parquet(input)
-    Sinks.writeParquet(graft.operators.Dedup.duplicateSpans(docs,
-      "doc_id", "text", w), s"$outDir/spans")
-    // excise from the span table just WRITTEN — identification runs
-    // exactly once, and the report reads files, not the DAG
-    Sinks.writeParquet(graft.operators.Dedup.exciseSpans(docs, "doc_id",
-      "text", spark.read.parquet(s"$outDir/spans")), s"$outDir/clean")
-    val n = spark.read.parquet(s"$outDir/spans").count()
-    val removed = spark.read.parquet(s"$outDir/clean")
-      .agg(org.apache.spark.sql.functions.sum(
-        org.apache.spark.sql.functions.col("n_removed")))
-      .head().getLong(0)
-    println(s">>> [dedup-spans] w=$w spans=$n tokens_removed=$removed")
-    spark.stop()
-  }
-
-  /** Corpus quality scoring in one pass: per document, the text-quality
-    * signals a pretraining filter consumes — token stats, heuristic
-    * language ID, composite quality score, repetition signals, and the
-    * mean unigram log-probability (the perplexity-style signal, trained
-    * on the corpus itself). Pure expressions plus the LM's one counts
-    * shuffle + scoring join. */
-  /** Dataset-card JSON for a document corpus
-    * ([[graft.operators.CorpusReport]]) — three linear scans, one small
-    * deterministic file. */
-  private def runReport(input: String, outPath: String): Unit = {
-    val spark = session()
-    val json =
-      graft.operators.CorpusReport.report(spark.read.parquet(input))
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
-      json + "\n")
-    println(s">>> [report] $json")
-    spark.stop()
-  }
-
-  /** BPE artifact lifecycle — tokenizer twin of the ANN/PCA stories:
-    * `bpe-train` runs the distributed word count + driver merge loop and
-    * persists the rank-ordered merge table; `bpe-encode` reads it back
-    * (never retrains) and tokenizes a corpus under the stored merges. */
-  private def runBpeTrain(input: String, mergesDir: String,
-      k: Int): Unit = {
-    val spark = session()
-    val merges =
-      graft.operators.Bpe.topMerges(spark.read.parquet(input), "text", k)
-    merges.coalesce(1).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(mergesDir)
-    println(s">>> [bpe-train] merges=" +
-      s"${spark.read.parquet(mergesDir).count()}")
-    spark.stop()
-  }
-
-  private def runBpeEncode(input: String, mergesDir: String,
-      outDir: String): Unit = {
-    val spark = session()
-    import org.apache.spark.sql.functions.{col, size}
-    val merges = spark.read.parquet(mergesDir)
-      .orderBy(col("rank")).collect()
-      .map(r => (r.getAs[String]("left"), r.getAs[String]("right")))
-      .toSeq
-    require(merges.nonEmpty, s"no merges at $mergesDir — run bpe-train")
-    val out = graft.operators.Bpe
-      .encode(spark.read.parquet(input), "text", merges)
-      .select(col("doc_id"), col("bpe_tokens"),
-        size(col("bpe_tokens")).as("n_bpe"))
-    Sinks.writeParquet(out, outDir)
-    println(s">>> [bpe-encode] docs=${spark.read.parquet(outDir).count()}")
-    spark.stop()
-  }
-
-  /** Container-metadata extraction over a binary corpus
-    * ([[graft.multimodal.Multimodal.videoMeta]]): one map-side pass
-    * writes (id, format, brand, duration_ms, width, height, codec) —
-    * the honest metadata face of the codec-less MP4/WebM policy. */
-  /** Whole-corpus k-means ([[graft.ml.DistributedKMeans]]): with an
-    * explicit k, one deterministic k-means||-seeded fit — assignments
-    * to `outDir/assignments`, centroids to `outDir/centroids`. With
-    * k=0, the optimal-k SWEEP (2..8) runs first on a deterministic 10%
-    * hash slice, the winner by simplified silhouette is fit on the
-    * full corpus, and the decision surface lands in `outDir/sweep` —
-    * the reference's k-search lifecycle at corpus scale, never
-    * collecting the data. */
-  private def runKmeansCorpus(input: String, outDir: String, k: Int,
-      iterations: Int): Unit = {
-    val spark = session()
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val vecs = spark.read.parquet(input)
-      .select(col("vec_id").cast("long").as("id"),
-        graft.operators.Similarity.asDouble(col("embedding")).as("v"))
-    val chosenK =
-      if (k > 0) k
-      else {
-        val slice = vecs.filter(
-          pmod(xxhash64(col("id"), lit(159L)), lit(10)) === 0)
-        val sweep = graft.ml.DistributedKMeans
-          .sweepK(slice, "id", "v", ks = (2 to 8), iterations = iterations)
-        sweep.map { case (kk, w, s) => (kk, w, s) }
-          .toDF("k", "wssse", "silhouette")
-          .coalesce(1).write.mode("overwrite")
-          .json(s"$outDir/sweep")
-        val best = sweep.maxBy(s => (s._3, -s._1))._1
-        println(s">>> [kmeans-corpus] sweep chose k=$best " +
-          sweep.map { case (kk, w, s) => f"k=$kk sil=$s%.4f" }
-            .mkString("(", ", ", ")"))
-        best
-      }
-    val (asg, cents) = graft.ml.DistributedKMeans.fit(
-      vecs, "id", "v", chosenK, iterations)
-    graft.io.Sinks.writeParquet(asg, s"$outDir/assignments")
-    graft.io.Sinks.writeParquet(
-      cents.select(col("c"), col("cv")), s"$outDir/centroids")
-    println(s">>> [kmeans-corpus] k=$chosenK wrote $outDir")
-    spark.stop()
-  }
-
-  private def runMediaMeta(input: String, outDir: String): Unit = {
-    val spark = session()
-    val withBin = spark.read.parquet(input)
-    graft.io.Sinks.writeParquet(
-      graft.multimodal.Multimodal.videoMeta(withBin), outDir)
-    println(s">>> [media-meta] wrote $outDir")
-    spark.stop()
-  }
-
-  /** Graph analytics bundle over an edge parquet (first two columns =
-    * the endpoints): PageRank centrality, label-propagation
-    * communities, and per-node triangle counts, each a parquet
-    * artifact. One verb because the three share the edge scan and
-    * answer the same corpus question from three sides (who's central /
-    * who clusters / how cliquish). */
-  private def runGraph(edgesPath: String, outDir: String,
-      iterations: Int): Unit = {
-    val spark = session()
-    val edges = spark.read.parquet(edgesPath)
-    val Array(a, b) = edges.columns.take(2)
-    val g = graft.operators.Graph
-    val ranks = g.pageRankUndirected(edges, a, b, iterations)
-    Sinks.writeParquet(ranks, s"$outDir/ranks")
-    val comms = g.labelPropagation(edges, a, b)
-    Sinks.writeParquet(comms, s"$outDir/communities")
-    val tri = g.triangleCounts(edges, a, b)
-    Sinks.writeParquet(tri, s"$outDir/triangles")
-    val nComm = comms.select("lab").distinct().count()
-    println(s">>> [graph] nodes=${ranks.count()} communities=$nComm " +
-      s"triangles=${tri.agg(org.apache.spark.sql.functions
-        .sum(org.apache.spark.sql.functions.col("n_tri"))).head()
-        .getLong(0) / 3}")
-    ranks.unpersist(); comms.unpersist(); tri.unpersist()
-    spark.stop()
-  }
-
-  /** Content screening bundle: compression-ratio repetition gate plus
-    * (optionally) an Aho–Corasick blocklist screen from a
-    * phrase-per-line file. Writes one profile parquet — (doc_id,
-    * n_bytes, ratio, hits, n_hits, keep) — with keep = in the
-    * compression band AND zero blocklist hits; the caller filters,
-    * the artifact keeps the evidence for every decision. */
-  private def runScreen(input: String, outDir: String,
-      phrasesFile: Option[String]): Unit = {
-    val spark = session()
-    import org.apache.spark.sql.functions.{col, lit, array}
-    val docs = spark.read.parquet(input)
-    val comp = graft.operators.Compression.profile(docs, "doc_id", "text")
-    val out = phrasesFile match {
-      case Some(f) =>
-        val phrases = graft.operators.PhraseScreen.loadPhrases(f)
-        val hits = graft.operators.PhraseScreen.screen(
-          docs, "doc_id", "text", phrases)
-        comp.join(hits, Seq("doc_id"))
-          .withColumn("keep", col("keep") && col("n_hits") === 0)
-      case None =>
-        comp.withColumn("hits", array().cast("array<string>"))
-          .withColumn("n_hits", lit(0L))
-    }
-    Sinks.writeParquet(out, outDir)
-    val kept = spark.read.parquet(outDir)
-    println(s">>> [screen] kept=${kept.filter(col("keep")).count()} " +
-      s"of ${kept.count()}")
-    spark.stop()
-  }
-
-  /** JSONL front door: PERMISSIVE read with corrupt-line quarantine
-    * ([[graft.io.Sources.readJsonl]]) → clean parquet + the quarantined
-    * raw lines as the audit artifact. */
-  private def runJsonlIngest(input: String, outDir: String): Unit = {
-    val spark = session()
-    val df = graft.io.Sources.readJsonl(spark, input)
-    val (clean, bad) = graft.io.Sources.splitQuarantine(df)
-    Sinks.writeParquet(clean, s"$outDir/clean")
-    Sinks.writeParquet(bad, s"$outDir/quarantine")
-    println(s">>> [jsonl-ingest] clean=" +
-      s"${spark.read.parquet(s"$outDir/clean").count()} quarantined=" +
-      s"${spark.read.parquet(s"$outDir/quarantine").count()}")
-    spark.stop()
-  }
-
-  /** Benchmark decontamination: per-training-doc w-gram overlap report
-    * against the eval set, plus the CLEANED corpus (overlapping docs
-    * anti-joined away) — the artifact keeps the evidence, the clean
-    * set is what trains. */
-  private def runDecontaminate(input: String, evalSet: String,
-      outDir: String, w: Int): Unit = {
-    val spark = session()
-    import org.apache.spark.sql.functions.col
-    val train = spark.read.parquet(input)
-    val ev = spark.read.parquet(evalSet)
-    val report = graft.operators.Decontaminate.overlapReport(
-      train, ev, "doc_id", "text", w)
-    Sinks.writeParquet(report, s"$outDir/report")
-    val clean = train.join(
-      spark.read.parquet(s"$outDir/report").select("doc_id"),
-      Seq("doc_id"), "left_anti")
-    Sinks.writeParquet(clean, s"$outDir/clean")
-    println(s">>> [decontaminate] contaminated=" +
-      s"${spark.read.parquet(s"$outDir/report").count()} " +
-      s"kept=${spark.read.parquet(s"$outDir/clean").count()} " +
-      s"of ${train.count()}")
-    spark.stop()
-  }
-
-  /** Build the persisted eval-gram decon index once; `decon-stream`
-    * then screens arriving shards without re-reading the eval set. */
-  private def runDeconIndex(evalSet: String, indexDir: String,
-      w: Int): Unit = {
-    val spark = session()
-    graft.operators.Decontaminate.writeEvalIndex(
-      spark.read.parquet(evalSet), "doc_id", "text", indexDir, w)
-    println(s">>> [decon-index] grams=" +
-      s"${spark.read.parquet(s"$indexDir/grams").count()} w=$w")
-    spark.stop()
-  }
-
-  /** Streaming decontamination screen: drain the parquet backlog in
-    * `srcDir` against the persisted index, writing per-doc overlap
-    * evidence to batchId-keyed partition dirs (replay-idempotent; the
-    * q202 face). Re-running with the same checkpoint is a no-op. */
-  private def runDeconStream(srcDir: String, indexDir: String,
-      outDir: String, chkDir: String): Unit = {
-    val spark = session()
-    graft.streaming.DeconStream.runToCompletion(spark, srcDir, indexDir,
-      outDir, chkDir)
-    // an already-drained checkpoint (or all-empty source files) is a
-    // correct no-op that never creates outDir
-    val flagged = if (graft.io.Sources.exists(spark, outDir))
-      graft.streaming.DeconStream.readOutput(spark, outDir).count() else 0L
-    println(s">>> [decon-stream] flagged=$flagged")
-    spark.stop()
-  }
-
-  /** Build the persisted REPLAYABLE near-dup index (md5 band keys +
-    * shingle sets) for `neardup-stream`. The xxhash64 production index
-    * stays behind `dedup-ingest`. */
-  private def runNearDupIndex(input: String, indexDir: String): Unit = {
-    val spark = session()
-    graft.operators.Dedup.writeReplayableIndex(
-      spark.read.parquet(input), "doc_id", "text", indexDir)
-    println(s">>> [neardup-index] docs=" +
-      s"${spark.read.parquet(s"$indexDir/sh").count()}")
-    spark.stop()
-  }
-
-  /** Streaming near-dup screen: drain the parquet backlog in `srcDir`
-    * against the persisted replayable index, writing verified
-    * (new_id, corpus_id, jaccard) matches to batchId-keyed partition
-    * dirs (replay-idempotent; the q203 face). */
-  private def runNearDupStream(srcDir: String, indexDir: String,
-      outDir: String, chkDir: String, threshold: Double): Unit = {
-    val spark = session()
-    graft.streaming.NearDupStream.runToCompletion(spark, srcDir, indexDir,
-      outDir, chkDir, threshold = threshold)
-    // same no-op contract as decon-stream: nothing drained, no outDir
-    val matches = if (graft.io.Sources.exists(spark, outDir))
-      graft.streaming.NearDupStream.readOutput(spark, outDir).count() else 0L
-    println(s">>> [neardup-stream] matches=$matches")
-    spark.stop()
-  }
-
-  /** Streaming model growth: drain the embedding backlog in `srcDir`,
-    * upserting one idempotent moments row per micro-batch (the q207
-    * face); the artifact then serves [[graft.ml.Pca.fitFromMoments]]
-    * without ever re-reading data. */
-  private def runMomentsStream(srcDir: String, momentsDir: String,
-      chkDir: String, dim: Int): Unit = {
-    val spark = session()
-    graft.streaming.MomentsStream.runToCompletion(spark, srcDir,
-      momentsDir, chkDir, dim = dim)
-    val rows = if (graft.io.Sources.exists(spark, momentsDir))
-      spark.read.parquet(momentsDir).count() else 0L
-    println(s">>> [moments-stream] batches=$rows")
-    spark.stop()
-  }
-
-  /** Streaming distinct-count growth over the portable-HLL artifact
-    * ([[graft.streaming.HllStream]]): drain the backlog, then serve
-    * the estimate from the register-max merge of the artifact alone —
-    * the q211 lifecycle as an operational verb. */
-  private def runHllStream(srcDir: String, hllDir: String,
-      chkDir: String, keyCol: String): Unit = {
-    val spark = session()
-    graft.streaming.HllStream.runToCompletion(spark, srcDir, hllDir,
-      chkDir, keyCol)
-    val regs = graft.operators.Sketches
-      .hllRegistersFromArtifact(spark, hllDir)
-    val est = graft.operators.Sketches.hllEstimate(regs)
-      .select("est").head().getDouble(0)
-    val batches = spark.read.parquet(hllDir)
-      .select("batch_id").distinct().count()
-    println(s">>> [hll-stream] batches=$batches est=$est")
-    spark.stop()
-  }
-
-  /** Streaming quantile growth over the histogram artifact
-    * ([[graft.streaming.SketchStreams.runHistToCompletion]]): drain
-    * the backlog, then serve p50/p95/p99 from the per-bin sum of the
-    * artifact alone — the q222 lifecycle as an operational verb. */
-  private def runHistStream(srcDir: String, histDir: String,
-      chkDir: String, valueCol: String, width: Long, nbins: Int): Unit = {
-    val spark = session()
-    graft.streaming.SketchStreams.runHistToCompletion(spark, srcDir,
-      histDir, chkDir, valueCol, width, nbins)
-    val counts = graft.operators.Sketches
-      .histogramCountsFromArtifact(spark, histDir)
-    val qs = graft.operators.Sketches
-      .histogramQuantiles(counts, width, Seq(0.5, 0.95, 0.99))
-      .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-    val batches = spark.read.parquet(histDir)
-      .select("batch_id").distinct().count()
-    println(s">>> [hist-stream] batches=$batches p50=${qs(0.5)} " +
-      s"p95=${qs(0.95)} p99=${qs(0.99)}")
-    spark.stop()
-  }
-
-  /** Dataset-overlap estimate by HLL set algebra ([[graft.operators
-    * .Sketches]], the q214 mechanism): |A∩B| ≈ Â + B̂ - Û from p=12
-    * portable registers — the two inputs are sketched independently
-    * and never joined. Writes the one-row estimate to `outDir`. */
-  private def runOverlap(aPath: String, bPath: String, keyCol: String,
-      outDir: String): Unit = {
-    val spark = session()
-    import org.apache.spark.sql.functions.{col, round}
-    val sk = graft.operators.Sketches
-    val ra = sk.hllRegisters(spark.read.parquet(aPath), keyCol, p = 12)
-    val rb = sk.hllRegisters(spark.read.parquet(bPath), keyCol, p = 12)
-    val ru = sk.hllMergeRegisters(ra, rb)
-    def est(r: org.apache.spark.sql.DataFrame, name: String) =
-      sk.hllEstimate(r, p = 12).select(col("est").as(name))
-    val out = est(ra, "est_a").crossJoin(est(rb, "est_b"))
-      .crossJoin(est(ru, "est_u"))
-      .withColumn("est_overlap",
-        round(col("est_a") + col("est_b") - col("est_u"), 4))
-    Sinks.writeParquet(out, outDir)
-    val row = spark.read.parquet(outDir).head()
-    println(s">>> [overlap] est_a=${row.getDouble(0)} " +
-      s"est_b=${row.getDouble(1)} est_u=${row.getDouble(2)} " +
-      s"est_overlap=${row.getDouble(3)}")
-    spark.stop()
-  }
-
-  /** Int8 scalar quantization audit: per-vector code checksum +
-    * reconstruction error ([[graft.operators.ScalarQuant]]). */
-  private def runQuantize(input: String, outDir: String): Unit = {
-    val spark = session()
-    import org.apache.spark.sql.functions.{avg, round}
-    val emb = spark.read.parquet(input)
-    val rep = graft.operators.ScalarQuant.quantizeReport(
-      emb, "vec_id", "embedding")
-    Sinks.writeParquet(rep, outDir)
-    val mean = spark.read.parquet(outDir)
-      .agg(round(avg("recon_err"), 6)).head().getDouble(0)
-    println(s">>> [quantize] vectors=${emb.count()} meanReconErr=$mean")
-    spark.stop()
-  }
-
-  /** Hybrid BM25 + cosine retrieval with RRF fusion
-    * ([[graft.operators.Retrieval.hybridTopK]]). */
-  private def runHybridSearch(docs: String, emb: String, outDir: String,
-      rest: List[String]): Unit = {
-    def opt(flag: String): Option[String] =
-      rest.sliding(2).collectFirst { case List(`flag`, v) => v }
-    val terms = rest.takeWhile(!_.startsWith("--"))
-    require(terms.nonEmpty, "hybrid-search needs at least one query term")
-    val spark = session()
-    val vecId = opt("--vec").map(_.toLong).getOrElse(0L)
-    val k = opt("--k").map(_.toInt).getOrElse(10)
-    // --rerank re-scores the fused candidates pairwise from the stored
-    // embeddings (the q224 two-stage face)
-    val out =
-      if (rest.contains("--rerank"))
-        graft.operators.Retrieval.rerankTopK(
-          spark.read.parquet(docs), spark.read.parquet(emb),
-          queryTerms = terms, queryVecId = vecId, k = k)
-      else
-        graft.operators.Retrieval.hybridTopK(
-          spark.read.parquet(docs), spark.read.parquet(emb),
-          queryTerms = terms, queryVecId = vecId, k = k)
-    Sinks.writeParquet(out, outDir)
-    println(s">>> [hybrid-search] results=" +
-      s"${spark.read.parquet(outDir).count()}")
-    spark.stop()
-  }
-
-  /** Architecture-contrast exhibits (q31/q32 spark.ml backends):
-    * runnable on demand, out of the timed registry (VERDICT r11 #7 —
-    * their by-design spark.ml per-job overhead measured nothing new
-    * at 11 s per capture). Writes one parquet dir per exhibit. */
-  private def runExhibits(sfDir: String, outDir: String): Unit = {
-    val spark = session()
-    Registry.exhibits.foreach { q =>
-      val t0 = System.nanoTime()
-      val res = q.run(spark, sfDir)
-      res.write.mode("overwrite").parquet(s"$outDir/${q.name}")
-      System.err.println(f"[exhibit] ${q.name} " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-  }
-
-  private def runScore(input: String, outDir: String): Unit = {
-    val spark = session()
-    import org.apache.spark.sql.functions.{col, round}
-    val docs = spark.read.parquet(input)
-    val tf = graft.functions.TextFunctions
-    val signals = docs.select(
-      col("doc_id"),
-      tf.tokenCount(col("text")).as("n_tokens"),
-      tf.langId(col("text")).as("lang_id"),
-      round(tf.qualityScore(col("text")), 6).as("quality"),
-      round(tf.dupBigramFrac(col("text")), 6).as("dup_bigram_frac"))
-    val lm = tf.unigramLogProb(docs, "doc_id", "text")
-      .select(col("doc_id"), round(col("avg_logprob"), 6).as("avg_logprob"))
-    val out = signals.join(lm, Seq("doc_id"), "left_outer")
-    Sinks.writeParquet(out, outDir)
-    // count the written files, not the scoring DAG (which would re-run
-    // the LM counts shuffle end to end)
-    println(s">>> [score] docs=${spark.read.parquet(outDir).count()}")
-    spark.stop()
-  }
-
-  /** PCA moments lifecycle from the command line — the model twin of
-    * ann-index/ann-ingest: train starts the append-only moments
-    * artifact, ingest appends a batch's moments (no old data re-read),
-    * project fits from the artifact alone and writes pc columns. The
-    * embedding width is read from the data. */
-  private def embDim(df: org.apache.spark.sql.DataFrame): Int =
-    df.select(org.apache.spark.sql.functions
-      .size(org.apache.spark.sql.functions.col("embedding"))).head()
-      .getInt(0)
-
-  private def runPcaTrain(input: String, momentsDir: String): Unit = {
-    val spark = session()
-    val emb = spark.read.parquet(input)
-    val dim = embDim(emb)
-    graft.ml.Pca.writeMoments(emb, "embedding", dim, momentsDir)
-    println(s">>> [pca-train] dim=$dim rows=${emb.count()}")
-    spark.stop()
-  }
-
-  private def runPcaIngest(batch: String, momentsDir: String): Unit = {
-    val spark = session()
-    val emb = spark.read.parquet(batch)
-    graft.ml.Pca.appendMoments(emb, "embedding", embDim(emb), momentsDir)
-    println(s">>> [pca-ingest] appended=${emb.count()}")
-    spark.stop()
-  }
-
-  private def runPcaProject(input: String, momentsDir: String,
-      outDir: String, k: Int): Unit = {
-    val spark = session()
-    val model = graft.ml.Pca.fitFromMoments(spark, momentsDir, k)
-    val emb = spark.read.parquet(input)
-    Sinks.writeParquet(model.transform(emb, "embedding"), outDir)
-    println(s">>> [pca-project] k=$k explained=" +
-      f"${model.explainedVariance.sum}%.4f")
-    spark.stop()
-  }
-
-  private def runDedupIngest(gc: GraftConfig, batch: String,
-      indexDir: String, outDir: String): Unit = {
-    val spark = session()
-    val (cross, inBatch, kept) = graft.operators.Dedup.ingest(spark,
-      spark.read.parquet(batch), indexDir, outDir,
-      numHashes = gc.minhashNumHashes, bands = gc.minhashBands,
-      threshold = gc.dedupThreshold, shingleN = gc.shingleN,
-      maxBucket = gc.maxBucket)
-    println(s">>> [dedup-ingest] cross=$cross in_batch=$inBatch kept=$kept")
-    spark.stop()
-  }
-
-  private def loadConf(rest: List[String]): GraftConfig = rest match {
-    case path :: _ => GraftConfig.fromFile(path)
-    case Nil       => GraftConfig()
-  }
-
-  def session(): SparkSession = GraftSession("graft")
-
-  private def run(gc: GraftConfig, interval: String, input: String,
-      outDir: String, searchK: Boolean): Unit = {
-    val spark = session()
+  /** The reference's two scripts: run the config task grid, either
+    * searching k and upserting the k-store (`searchK`) or clustering
+    * with the stored k and writing the JSON docs. Returns each task's
+    * segment count. */
+  private def clusterGrid(spark: SparkSession, gc: GraftConfig,
+      interval: String, input: String, outDir: String,
+      searchK: Boolean): Seq[(String, Long)] = {
     val date = java.time.LocalDate.now().toString
     val raw =
       if (input.endsWith(".csv")) Sources.readCsv(spark, input)
@@ -912,7 +745,8 @@ object Main {
       .getOrElse(gc.args(gc.optimalKarg).limit)
     val df = Sources.downsample(raw, limit, seed = 42L)
 
-    def runTask(task: (String, String, String, String, String)): Unit = {
+    def runTask(task: (String, String, String, String, String))
+        : (String, Long) = {
       val (macroCol, microCol, xCol, yCol, alg) = task
       val conf = EngineConf(
         macroCol = macroCol, microCol = microCol, xCol = xCol, yCol = yCol,
@@ -927,7 +761,7 @@ object Main {
         val results = ClusterEngine.run(df, conf).persist()
         try {
           KStore.write(KStore.fromResults(results, conf, date), kStorePath)
-          println(s">>> [optimal-k] $taskTag: ${results.count()} segments")
+          taskTag -> results.count()
         } finally results.unpersist()
       } else {
         val cached =
@@ -939,7 +773,7 @@ object Main {
             s"$outDir/${interval}_originalCollection/$taskTag")
           Sinks.writeJson(ResultDocs.d3(results, conf, date),
             s"$outDir/${interval}_d3Collection/$taskTag")
-          println(s">>> [cluster] $taskTag: ${results.count()} segments")
+          taskTag -> results.count()
         } finally results.unpersist()
       }
     }
@@ -961,114 +795,6 @@ object Main {
       try Await.result(
         Future.sequence(grid.map(t => Future(runTask(t)))), Duration.Inf)
       finally pool.shutdown()
-    } else grid.foreach(runTask)
-    spark.stop()
-  }
-
-  /** Cardinality-sketch artifact lifecycle (`operators/Sketches.scala`):
-    * ingest appends one tiny per-(source)-group HLL row per batch —
-    * never reading old data — and report answers "distinct docs ever
-    * seen" from the artifact alone. */
-  private def runSketchIngest(batch: String, sketchDir: String,
-      batchId: Long): Unit = {
-    val spark = session()
-    graft.operators.Sketches.appendSketches(
-      spark.read.parquet(batch), "source", "doc_id", sketchDir, batchId)
-    println(s">>> [sketch-ingest] batch=$batchId dir=$sketchDir")
-    spark.stop()
-  }
-
-  private def runSketchReport(sketchDir: String, outDir: String): Unit = {
-    val spark = session()
-    val report = graft.operators.Sketches.estimateFromArtifact(spark, sketchDir)
-      .orderBy(org.apache.spark.sql.functions.col("group"))
-    Sinks.writeParquet(report, outDir)
-    println(s">>> [sketch-report] groups=${spark.read.parquet(outDir).count()}")
-    spark.stop()
-  }
-
-  /** Content-keyed incremental diff: only `added` rows need dedup +
-    * scoring downstream; `removed` feeds retention bookkeeping. */
-  private def runSnapshotDiff(oldPath: String, newPath: String,
-      outDir: String): Unit = {
-    val spark = session()
-    val diff = graft.operators.Dedup.snapshotDiff(
-      spark.read.parquet(oldPath), spark.read.parquet(newPath), "text")
-    Sinks.writeParquet(diff, outDir)
-    val n = spark.read.parquet(outDir)
-      .groupBy("diff_status").count().collect()
-      .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" ")
-    println(s">>> [snapshot-diff] $n")
-    spark.stop()
-  }
-
-  /** fastText-style quality gate: train the hashed-bigram logistic
-    * classifier against the `en` slice as the quality target, score
-    * everything, keep rows at or above the threshold. */
-  private def runQualityFilter(input: String, outDir: String,
-      threshold: Double): Unit = {
-    val spark = session()
-    import org.apache.spark.sql.functions.col
-    val docs = spark.read.parquet(input)
-    val model = graft.ml.QualityClassifier.train(docs, "doc_id", "text",
-      isTarget = col("lang") === "en", buckets = 1024, seed = 42L,
-      maxSample = 200, iters = 60)
-    val scored = docs.join(
-      graft.ml.QualityClassifier.score(docs, "doc_id", "text", model),
-      "doc_id")
-    Sinks.writeParquet(scored.filter(col("quality_score") >= threshold),
-      outDir)
-    println(s">>> [quality-filter] kept=" +
-      s"${spark.read.parquet(outDir).count()} of ${docs.count()}")
-    spark.stop()
-  }
-
-  /** The nightly corpus build in ONE verb — see
-    * [[graft.operators.Curation.curate]]; `--append` grows an existing
-    * directory with new-content docs only
-    * ([[graft.operators.Curation.curateAppend]]). */
-  private def runCurate(input: String, outDir: String,
-      rowsPerShard: Long, append: Boolean = false): Unit = {
-    val spark = session()
-    val docs = spark.read.parquet(input)
-    val counts =
-      if (append) graft.operators.Curation.curateAppend(spark, docs,
-        outDir, rowsPerShard)
-      else graft.operators.Curation.curate(spark, docs, outDir,
-        rowsPerShard)
-    val verb = if (append) "curate-append" else "curate"
-    val summary = counts.toSeq.sortBy(_._1)
-      .map { case (sp, n) => s"$sp=$n" }.mkString(" ")
-    println(s">>> [$verb] in=${docs.count()} kept=${counts.values.sum} " +
-      summary)
-    spark.stop()
-  }
-
-  /** Small-files compaction for an ingest-grown parquet directory —
-    * see [[graft.io.Sinks.compact]]. */
-  private def runCompact(dir: String, targetBytes: Long): Unit = {
-    val spark = session()
-    val (before, after) = Sinks.compact(spark, dir, targetBytes)
-    println(s">>> [compact] $dir files $before -> $after")
-    spark.stop()
-  }
-
-  /** DSIR selection: importance-weight against the `en` target and keep
-    * the Gumbel-top-k docs (`operators/Dsir.scala`). */
-  private def runDsirSelect(input: String, outDir: String,
-      k: Int): Unit = {
-    val spark = session()
-    import org.apache.spark.sql.functions.col
-    val docs = spark.read.parquet(input)
-    val weights = graft.operators.Dsir.importanceWeights(docs, "doc_id",
-      "text", isTarget = col("lang") === "en", buckets = 1024, seed = 42L)
-    // target docs inform the model but only the RAW pool is selected
-    // from — otherwise the highest-weighted target docs fill the top-k
-    val raw = docs.filter(col("lang") =!= "en").select(col("doc_id"))
-    val picked = graft.operators.Dsir.resampleTopK(
-      weights.join(raw, "doc_id"), "doc_id", k = k, seed = 7L)
-    Sinks.writeParquet(docs.join(picked, "doc_id"), outDir)
-    println(s">>> [dsir-select] kept=${spark.read.parquet(outDir).count()}")
-    spark.stop()
+    } else grid.map(runTask)
   }
 }

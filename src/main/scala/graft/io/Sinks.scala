@@ -80,16 +80,6 @@ object Sinks {
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
 
-  /** S8: k-store upsert — overwrite the partition keyed by
-    * (algorithm, macro, micro, firstColumn, secondColumn), the
-    * deterministic-reduce replacement for the reference's 12-thread Mongo
-    * upsert race (`optimal_k.py:195-283`, SURVEY.md §7.4). */
-  def upsertKStore(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy("algorithm", "macro", "micro", "firstColumn",
-        "secondColumn")
-      .json(path)
-
   /** MERGE-style upsert without a table format: rows from `updates`
     * replace same-key rows of `existing`, new keys append. One
     * anti-join + union — the emulation to use until a Delta/Iceberg

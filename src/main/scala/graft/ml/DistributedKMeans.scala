@@ -389,34 +389,6 @@ object DistributedKMeans {
     }.toDF("kk", "c", "cv")
   }
 
-  /** Simplified silhouette of an assignment (Hruschka et al.): per
-    * point, a = distance to its OWN centroid, b = distance to the
-    * nearest OTHER centroid, s = (b − a)/max(a, b); the corpus score
-    * is the mean. O(n·k) — centroid distances instead of pairwise —
-    * which is what makes silhouette usable at corpus scale; the
-    * driver-side [[LocalMetrics.silhouette]] stays the per-segment
-    * exact tool. Returns NaN-free 0 for k = 1 (the <2-labels guard the
-    * reference applies). */
-  def simplifiedSilhouette(points: DataFrame, idCol: String,
-      vecCol: String, centroids: DataFrame): Double = {
-    val spark = points.sparkSession
-    if (centroids.count() < 2) return 0.0
-    val vecs = points
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    val row = vecs.crossJoin(broadcast(centroids))
-      .withColumn("d", sqrt(sqDist(col("v"), col("cv"))))
-      .groupBy(col("id"))
-      .agg(min(col("d")).as("a"),
-        sort_array(collect_list(col("d"))).getItem(1).as("b"))
-      // a = nearest centroid (own, by definition of the assignment);
-      // b = second-nearest = nearest OTHER
-      .select(avg(when(greatest(col("a"), col("b")) > 0,
-        (col("b") - col("a")) / greatest(col("a"), col("b")))
-        .otherwise(lit(0.0))).as("s"))
-      .head()
-    if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-  }
-
   /** The REPLAYABLE k-sweep — M9/A9's oracle-able face (q189): fit
     * every k under the q158 determinism contract (first-k-by-id init,
     * fixed unrolled rounds, 6-dp centroid quantization), score each fit

@@ -39,17 +39,18 @@ object Decontaminate {
   /** Persist the eval-set gram index: (gram, eval_id) rows plus a
     * one-row meta with `w` — screening a growing training corpus then
     * reads the INDEX, never the eval documents (which may not even be
-    * distributable — benchmark answer keys stay where they live). */
+    * distributable — benchmark answer keys stay where they live).
+    * Returns the number of (gram, eval_id) rows written. */
   def writeEvalIndex(evalSet: DataFrame, idCol: String, textCol: String,
-      path: String, w: Int = 8): Unit = {
+      path: String, w: Int = 8): Long = {
     val spark = evalSet.sparkSession
     import spark.implicits._
-    evalSet
+    val grams = BroadcastRelease.writeCounted(evalSet
       .select(col(idCol).as("eval_id"),
         explode(gramsOf(col(textCol), w)).as("gram"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$path/grams")
+      .distinct(), s"$path/grams")
     Seq(w).toDF("w").write.mode("overwrite").parquet(s"$path/meta")
+    grams
   }
 
   /** Append NEW eval documents to a persisted index — idempotent (a

@@ -986,10 +986,11 @@ object Dedup extends Serializable {
     * the corpus text again ([[graft.streaming.NearDupStream]]). The md5
     * family costs string width vs the production xxhash64 index
     * ([[writeIndex]]); what it buys is an ANSI-SQL oracle over the
-    * whole streaming screen (q203). */
+    * whole streaming screen (q203). Returns the number of indexed
+    * documents (shingle-set rows written). */
   def writeReplayableIndex(df: DataFrame, idCol: String, textCol: String,
       path: String, numHashes: Int = 8, bands: Int = 4,
-      shingleN: Int = 3): Unit = {
+      shingleN: Int = 3): Long = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = df.sparkSession
     import spark.implicits._
@@ -997,14 +998,14 @@ object Dedup extends Serializable {
     // WRITTEN artifact: the corpus is tokenized + shingled exactly once
     // (the md5 signature pass reads the compact parquet back, not the
     // text)
-    df.select(col(idCol).as("id"),
-        shingles(col(textCol), shingleN).as("sh"))
-      .write.mode("overwrite").parquet(s"$path/sh")
+    val docs = BroadcastRelease.writeCounted(df.select(col(idCol).as("id"),
+      shingles(col(textCol), shingleN).as("sh")), s"$path/sh")
     bandsFromShingles(spark.read.parquet(s"$path/sh"), numHashes, bands)
       .write.mode("overwrite").parquet(s"$path/bands")
     Seq((numHashes, bands, shingleN))
       .toDF("num_hashes", "bands", "shingle_n")
       .write.mode("overwrite").parquet(s"$path/meta")
+    docs
   }
 
   /** Screen a new batch against a persisted replayable index: the

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 /** The one session factory: the suite's own session carries every
   * setting [[GraftSession]] owns, `SPARK_GRAFT_CPUS` has one meaning
   * everywhere, no second builder creeps back into the tree, no dev
-  * main sits in `src/main`, and the streaming replay width stays
-  * under the shuffle-writer threshold. */
+  * main sits in `src/main`, the CLI creates and stops one session, and
+  * the streaming replay width stays under the shuffle-writer
+  * threshold. */
 class GraftSessionSpec extends GraftSuite {
 
   test("the shared test session carries every setting GraftSession owns") {
@@ -80,6 +81,15 @@ class GraftSessionSpec extends GraftSuite {
     assert(withMain.contains("Main.scala"))
     assert(withMain.subsetOf(mains),
       s"dev mains in src/main: ${(withMain -- mains).mkString(", ")}")
+  }
+
+  test("Main owns the CLI's one session: one GraftSession( call and one " +
+      ".stop() in Main.scala (comments ignored)") {
+    val main = sources("src/main/scala")
+      .find(_._1.getFileName.toString == "Main.scala")
+      .getOrElse(fail("Main.scala not found"))._2
+    assert("""GraftSession\s*\(""".r.findAllIn(main).size === 1)
+    assert("""\.\s*stop\s*\(\s*\)""".r.findAllIn(main).size === 1)
   }
 
   test("the streaming replay width keeps the bypass shuffle writer") {
